@@ -940,8 +940,8 @@ def main():
     # parallelism so the flag can be checked against facts.
     sc = spark.sparkContext
     env_info = {
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
-        or os.cpu_count() or 0,
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS")
+                    or os.cpu_count() or 0),
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
     }

@@ -464,7 +464,7 @@ def expire_snapshots(table, older_than_ms=None, retain_last: int = 1,
 
     Reachability runs in one of two modes (ExpireSnapshotsSparkAction):
     LOCAL — Python set math over the (cached) manifest reads, fastest for
-    small metadata; DISTRIBUTED — `spark.read.parquet` over the manifest
+    small metadata; DISTRIBUTED — a Parquet read over the manifest
     files with a `left_anti` join kept-vs-expired, so driver memory stays
     flat at any file count. AUTO switches on total entry count from the
     manifest-list summaries (no manifest reads needed to decide).
@@ -667,7 +667,7 @@ def delete_reachable_files(table, dry_run: bool = False,
     nothing is deleted.
 
     The file-level closure is computed LOCAL (Python sets over cached
-    manifest reads) or DISTRIBUTED (one `spark.read.parquet` over all
+    manifest reads) or DISTRIBUTED (one Parquet read over all
     manifests, distinct paths streamed back) — AUTO picks by total entry
     count from the manifest-list summaries, so a 100 TB purge plan never
     materializes file rows on the driver.
@@ -1064,6 +1064,7 @@ def remove_dangling_deletes(table) -> int:
     RemoveDanglingDeletesSparkAction.java), while `plan_files()` supplies
     only the live data-file side."""
     from .manifests import DELETED as _DELETED, EQUALITY_DELETES
+    from .relations import files_df
     from .scan import _data_rel
 
     scan = table.scan()
@@ -1144,8 +1145,11 @@ def remove_dangling_deletes(table) -> int:
                              tbl["file_path"].to_pylist()}
             else:
                 paths = {_data_rel(r.file_path) for r in
-                         table.spark.read.parquet(d.file.file_path)
-                         .select("file_path").distinct().collect()}
+                         files_df(table.spark, "parquet",
+                                  "file_path string", [d.file.file_path],
+                                  {d.file.file_path:
+                                   d.file.file_size_in_bytes})
+                         .distinct().collect()}
             if not (paths & live_paths):
                 dangling.add(d.file.file_path)
     for p, total in puffin_total.items():

@@ -12,7 +12,8 @@ Parquet columns* (`min_f<id>`, `max_f<id>`, keyed by field id so renames are
 free). Planning then works two ways:
   - local:       pyarrow-read the manifests, evaluate in Python (fast for
                  small metadata — the reference's LOCAL planning mode);
-  - distributed: spark.read.parquet(manifests) and filter with Columns (the
+  - distributed: read the manifests as one manifest-fed Spark relation
+                 (relations.py) and filter with Columns (the
                  reference's DISTRIBUTED mode, BaseDistributedDataScan.java:57),
                  which is what scales to 100 TB metadata.
 Stats are collected from Parquet footers (row-group min/max/null-count),

@@ -4,7 +4,7 @@ Manifests and manifest lists are stored as Parquet (SURVEY §7 design
 stance), so metadata-scale computations — reachability for
 expire/reachable-purge, valid-file sets for orphan cleanup, the
 files/entries metadata tables, changelog planning — run as plain
-`spark.read.parquet` jobs over the manifest files with anti-joins. This is
+Spark Parquet jobs over the manifest files with anti-joins. This is
 the shape of the reference's Spark actions
 (spark/v4.0/spark/src/main/java/org/apache/iceberg/spark/actions/
 ExpireSnapshotsSparkAction.java, DeleteOrphanFilesSparkAction.java:257-358)
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .manifests import entry_from_spark_row, read_manifest_list
+from .relations import files_df
 
 # total manifest entries below which driver-side set math beats a Spark job
 DISTRIBUTED_ENTRY_THRESHOLD = 200_000
@@ -163,7 +164,8 @@ def _core_entries_df_uncached(spark: SparkSession, manifests,
     legs = []
     if plain:
         paths = [m.path for m in plain]
-        df = spark.read.schema(CORE_ENTRY_SCHEMA).parquet(*paths)
+        df = files_df(spark, "parquet", CORE_ENTRY_SCHEMA, paths,
+                      {m.path: m.length for m in plain})
         if with_manifest_path:
             df = df.select("*", manifest_path_col(paths)
                            .alias("manifest_path"))
@@ -223,8 +225,9 @@ def distinct_write_schema_ids(spark: SparkSession, manifests) -> set:
     schema = T.StructType([T.StructField("write_schema_id", T.IntegerType())])
     legs = []
     if plain:
-        legs.append(spark.read.schema(schema)
-                    .parquet(*[m.path for m in plain]))
+        legs.append(files_df(spark, "parquet", schema,
+                             [m.path for m in plain],
+                             {m.path: m.length for m in plain}))
     if enc:
         payload = [(m.path, *file_key(m.path)) for m in enc]
         sc = spark.sparkContext

@@ -11,8 +11,9 @@ BaseDistributedDataScan.java:57 — local planning is threaded pyarrow on
 the driver; distributed planning runs the same filters as a Spark job over
 the manifest Parquet (what survives 100 TB metadata).
 
-Read path: one `spark.read.schema(...).parquet(*files)` per write-schema
-group (field-ID column mapping handles renames), the *full* filter
+Read path: one manifest-fed relation per write-schema group, built from
+the plan's paths and recorded sizes with no listing (relations.py;
+field-ID column mapping handles renames), the *full* filter
 re-applied as residual (cheap, always correct), position deletes applied by
 (file, pos) anti-join on `_metadata.file_path/row_index`, equality deletes
 by keyed anti-join scoped to `data_seq < delete_seq` (format/spec.md:1415).
@@ -43,6 +44,7 @@ from pyspark.sql import functions as F
 
 from . import expressions as E
 from . import io as _io
+from . import relations as _rel
 from .manifests import (
     DATA,
     DELETED,
@@ -413,6 +415,8 @@ class TableScan:
                     str(_RELATION_CACHE_STATS["hits"])
                 rj["metadata"]["engine-relation-cache-misses"] = \
                     str(_RELATION_CACHE_STATS["misses"])
+                rj["metadata"]["engine-relation-build"] = \
+                    _relation_build(data_entries, pos_del + eq_del)
                 SINK.report(ident, "scan-report", rj)
         except Exception:
             pass
@@ -510,6 +514,7 @@ class TableScan:
         by_spec: dict = {}
         for m in manifests:
             by_spec.setdefault(m.spec_id, []).append(m.path)
+        sizes = {m.path: m.length for m in manifests}
         out = []
         from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -527,7 +532,8 @@ class TableScan:
             # timestamp column) fail the read and fall back to the
             # per-manifest field-ID-mapped local reader below.
             read_schema = from_arrow_schema(manifest_arrow_schema(schema, spec))
-            df = self.spark.read.schema(read_schema).parquet(*paths)
+            df = _rel.files_df(self.spark, "parquet", read_schema, paths,
+                               sizes)
             cond = F.col("status") != F.lit(DELETED)
             if not isinstance(bound, E.AlwaysTrue):
                 proj = E.project(bound, spec, inclusive=True)
@@ -969,23 +975,22 @@ def _conf_int(spark, key: str, default: int) -> int:
 _EQ_LITERAL_FILTER_CACHE: dict = {}
 _EQ_LITERAL_FILTER_CACHE_CAP = 256
 
-# Relation cache: `spark.read.schema(s).format(f).load(paths)` builds an
-# InMemoryFileIndex by stat-ing EVERY path — ~0.9s of driver time at 320
-# files, paid per query (Spark's own catalog tables cache their file
-# index; a path-list read cannot). Data files are immutable and
-# uuid-named, so a (schema, format, sorted paths) key can never serve
-# stale bytes; expired files simply stop appearing in new plans' keys.
-# LRU: hits refresh recency, the oldest entry alone evicts at cap — a
-# long-lived session alternating >cap path-sets must not thrash the
-# whole cache the way a wholesale clear() did. Session-cumulative
-# hit/miss counters ride every scan report ("engine-relation-cache-*"
-# metadata), making cold-start file-index cost observable per query.
+# Relation cache: a manifest-fed relation (relations.files_df) costs
+# about three py4j calls per file to build — ~0.3 s at 1,050 files —
+# while a hit costs nothing, so re-reads of a snapshot keep their
+# relation. Data files are immutable and uuid-named, so a (schema,
+# format, sorted paths) key can never serve stale bytes; expired files
+# simply stop appearing in new plans' keys. LRU: hits refresh recency,
+# the oldest entry alone evicts at cap — a long-lived session
+# alternating >cap path-sets must not thrash the whole cache the way a
+# wholesale clear() did. Session-cumulative hit/miss counters ride
+# every scan report ("engine-relation-cache-*" metadata).
 _RELATION_CACHE: dict = {}
 _RELATION_CACHE_CAP = 128
 _RELATION_CACHE_STATS = {"hits": 0, "misses": 0}
 
 
-def _cached_file_df(spark, ffmt: str, read_schema, paths):
+def _cached_file_df(spark, ffmt: str, read_schema, paths, sizes):
     key = (spark.sparkContext.applicationId, ffmt, str(read_schema),
            tuple(paths))
     df = _RELATION_CACHE.pop(key, None)
@@ -993,7 +998,7 @@ def _cached_file_df(spark, ffmt: str, read_schema, paths):
         _RELATION_CACHE_STATS["misses"] += 1
         while len(_RELATION_CACHE) >= _RELATION_CACHE_CAP:
             _RELATION_CACHE.pop(next(iter(_RELATION_CACHE)))
-        df = spark.read.schema(read_schema).format(ffmt).load(list(paths))
+        df = _rel.files_df(spark, ffmt, read_schema, paths, sizes)
     else:
         _RELATION_CACHE_STATS["hits"] += 1
     _RELATION_CACHE[key] = df  # (re)insert at most-recent position
@@ -1439,6 +1444,25 @@ def _pos_delete_bytes(plan: ScanPlan) -> int:
         for d in plan.pos_deletes)
 
 
+def _relation_build(data_entries, delete_entries) -> str:
+    """How plan_to_df builds the plan's file relations: "manifest-fed"
+    when every data and delete file it may read as a relation is a plain
+    file relations.files_df can describe, "spark.read" when none is,
+    "mixed" otherwise. Deletion vectors are not relation reads;
+    encrypted files always read through spark.read."""
+    fed = set()
+    for e in list(data_entries) + list(delete_entries):
+        f = e.file
+        if _is_dv(f):
+            continue
+        fmt = f.file_format if f.content == DATA else "parquet"
+        fed.add(f.key_metadata is None
+                and _rel.manifest_fed(fmt, f.file_size_in_bytes))
+    if False not in fed:
+        return _rel.MANIFEST_FED
+    return _rel.SPARK_READ if True not in fed else "mixed"
+
+
 def _is_dv(f) -> bool:
     return f.file_format == "puffin" and f.content_offset is not None
 
@@ -1484,9 +1508,10 @@ def pos_delete_rows_df(spark, deletes, with_source: bool = False):
                for d in deletes if _is_dv(d.file)]
     dfs = []
     if pq_paths:
-        # explicit schema: skips the inference job spark.read would run
-        pdf = spark.read.schema("file_path string, pos long") \
-            .parquet(*pq_paths)
+        # explicit schema and recorded sizes: no inference, no listing
+        pdf = _rel.files_df(
+            spark, "parquet", "file_path string, pos long", pq_paths,
+            {d.file.file_path: d.file.file_size_in_bytes for d in deletes})
         cols = [F.col("file_path"), F.col("pos")]
         if with_source:
             cols.append(_io.decode_spark_path_col(
@@ -2011,10 +2036,10 @@ def _delete_file_readers(spark, ds, read_schema, with_meta: bool = False):
     yielded frame (native reads expose it implicitly; the decrypting
     reader synthesizes it), so seq-map lookups on `_metadata.file_path`
     work uniformly."""
-    plain, enc, raw = [], {}, []
+    plain, enc, raw = {}, {}, []
     for d in ds:
         if d.file.key_metadata is None:
-            plain.append(d.file.file_path)
+            plain[d.file.file_path] = d.file.file_size_in_bytes
         else:
             from .parquet_crypto import file_crypto
 
@@ -2024,7 +2049,7 @@ def _delete_file_readers(spark, ds, read_schema, with_meta: bool = False):
             else:
                 enc.setdefault(fc[1], []).append(d.file.file_path)
     if plain:
-        yield spark.read.schema(read_schema).parquet(*plain)
+        yield _rel.files_df(spark, "parquet", read_schema, plain, plain)
     if raw:
         # imported reference-native encrypted delete files: raw footer
         # DEK per file — JVM factory only, loud refusal without it
@@ -2298,6 +2323,8 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                 f"{entries[0].file.file_path} is {ffmt} (use copy-on-write "
                 f"modes for {ffmt} tables)")
         paths = [e.file.file_path for e in entries]
+        sizes = {e.file.file_path: e.file.file_size_in_bytes
+                 for e in entries}
         read_schema = wschema.to_spark()
         # variant columns: the engine writes canonical JSON text (see
         # write_data_files) — read as string, parse_json back to
@@ -2481,7 +2508,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                 # probe 363 ms ~= raw 368 ms), and the single relation
                 # shares its cache entry with the table's no-delete
                 # scans.
-                df = (_cached_file_df(spark, ffmt, read_schema, paths)
+                df = (_cached_file_df(spark, ffmt, read_schema, paths, sizes)
                       .filter(~probed))
             else:
                 # probe unavailable: per-row expression chains cost per
@@ -2495,7 +2522,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                 pieces = []
                 if clean:
                     pieces.append(
-                        _cached_file_df(spark, ffmt, read_schema, clean))
+                        _cached_file_df(spark, ffmt, read_schema, clean, sizes))
                 if hit:
                     # invariant paths (no char Spark would
                     # percent-escape): compare the RAW URI column
@@ -2515,7 +2542,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                                 F.col("_metadata.file_path")),
                             F.col("_metadata.row_index"), pos_ranges)
                     pieces.append(
-                        _cached_file_df(spark, ffmt, read_schema, hit)
+                        _cached_file_df(spark, ffmt, read_schema, hit, sizes)
                         .filter(~deleted))
                 df = pieces[0]
                 for p in pieces[1:]:
@@ -2527,7 +2554,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
             # read parallelizes exactly like a native format reader
             df = _avro_decode_df(spark, paths, read_schema)
         else:
-            df = _cached_file_df(spark, ffmt, read_schema, paths)
+            df = _cached_file_df(spark, ffmt, read_schema, paths, sizes)
         if shred_pre:
             from .schema import NestedField as _NF
 

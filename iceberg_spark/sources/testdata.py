@@ -21,7 +21,8 @@ TABLES = (
 
 
 def session(app: str = "iceberg_spark", cpus: int = 0) -> SparkSession:
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or 0) \
+        or os.cpu_count() or 8
     builder = SparkSession.builder
     try:
         # KMS jar on the INITIAL classpath: lets encrypted parquet read

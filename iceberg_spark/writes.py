@@ -397,8 +397,10 @@ def _collect_files_spark(spark, paths: list, fmt: str, schema, spec,
     `_metadata.file_path` — the distributed twin of the footer pass
     (reference collects ORC metrics in OrcMetrics.java the same way)."""
     from .manifests import DataFile
+    from .relations import files_df
 
-    sdf = spark.read.schema(schema.to_spark()).format(fmt).load(paths)
+    sizes = {p: _io.file_size(p) for p in paths}
+    sdf = files_df(spark, fmt, schema.to_spark(), paths, sizes)
     prim = [f for f in schema.fields
             if isinstance(f.type, str) and f.type != "binary"
             and not f.type.startswith("fixed")]
@@ -433,7 +435,7 @@ def _collect_files_spark(spark, paths: list, fmt: str, schema, spec,
             spec_id=spec.spec_id,
             partition=dict(partitions.get(path) or {}),
             record_count=d["__cnt"],
-            file_size_in_bytes=_io.file_size(path),
+            file_size_in_bytes=sizes.get(path) or _io.file_size(path),
             stats=stats,
         ))
     return out
