@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -50,10 +51,21 @@ def _pyspark_jars_dir() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "jars")
 
 
+def _jar_dirs(h: str) -> list:
+    """Candidate homes of the content-addressed jar, most stable first:
+    the per-user cache (survives a fresh TMPDIR), then the temp dir."""
+    cache = (os.environ.get("XDG_CACHE_HOME")
+             or os.path.join(os.path.expanduser("~"), ".cache"))
+    return [os.path.join(cache, "iceberg_spark", f"kms-{h}"),
+            os.path.join(tempfile.gettempdir(), f"iceberg_spark_kms-{h}")]
+
+
 def _build_jar():
     """Compile the KmsClient against Spark's own parquet/hadoop jars
-    into a content-addressed temp jar (one build per source version per
-    machine). Returns the jar path or None when no JDK is available."""
+    into a content-addressed jar under the per-user cache directory
+    (one build per source version per user; the temp dir when the cache
+    is not writable). Returns the jar path or None when no JDK is
+    available."""
     if _jar_path_cache:
         return _jar_path_cache[0]
     try:
@@ -68,31 +80,46 @@ def _build_jar():
         _jar_path_cache.append(None)
         return None
     h = hashlib.sha256(blob).hexdigest()[:16]
-    out_dir = os.path.join(tempfile.gettempdir(),
-                           f"iceberg_spark_kms-{h}")
-    jar = os.path.join(out_dir, "iceberg-spark-kms.jar")
-    if os.path.exists(jar):
+    dirs = _jar_dirs(h)
+    for d in dirs:
+        jar = os.path.join(d, "iceberg-spark-kms.jar")
+        if os.path.exists(jar):
+            _jar_path_cache.append(jar)
+            return jar
+    err = None
+    for d in dirs:
+        try:
+            os.makedirs(d, exist_ok=True)
+            work = tempfile.mkdtemp(dir=d)
+        except OSError as e:  # not writable: try the next directory
+            err = e
+            continue
+        # compile privately, then publish the finished jar with one
+        # rename: a concurrent process never sees a partial jar
+        jar = os.path.join(d, "iceberg-spark-kms.jar")
+        try:
+            cls_dir = os.path.join(work, "classes")
+            cp = os.path.join(_pyspark_jars_dir(), "*")
+            subprocess.run(
+                ["javac", "-encoding", "UTF-8", "-cp", cp, "-d", cls_dir]
+                + srcs,
+                check=True, capture_output=True, timeout=120)
+            built = os.path.join(work, "iceberg-spark-kms.jar")
+            subprocess.run(
+                ["jar", "cf", built, "-C", cls_dir, "."],
+                check=True, capture_output=True, timeout=120)
+            os.replace(built, jar)
+        except Exception as e:  # noqa: BLE001 — any failure = fallback path
+            err = e
+            break
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
         _jar_path_cache.append(jar)
         return jar
-    try:
-        cls_dir = os.path.join(out_dir, "classes")
-        os.makedirs(cls_dir, exist_ok=True)
-        cp = os.path.join(_pyspark_jars_dir(), "*")
-        subprocess.run(
-            ["javac", "-encoding", "UTF-8", "-cp", cp, "-d", cls_dir]
-            + srcs,
-            check=True, capture_output=True, timeout=120)
-        subprocess.run(
-            ["jar", "cf", jar + ".tmp", "-C", cls_dir, "."],
-            check=True, capture_output=True, timeout=120)
-        os.replace(jar + ".tmp", jar)
-    except Exception as e:  # noqa: BLE001 — any failure = fallback path
-        print(f"iceberg_spark: JVM crypto unavailable "
-              f"(falling back to pyarrow readers): {e}", file=sys.stderr)
-        _jar_path_cache.append(None)
-        return None
-    _jar_path_cache.append(jar)
-    return jar
+    print(f"iceberg_spark: JVM crypto unavailable "
+          f"(falling back to pyarrow readers): {err}", file=sys.stderr)
+    _jar_path_cache.append(None)
+    return None
 
 
 def available(spark) -> bool:
@@ -155,8 +182,6 @@ def available(spark) -> bool:
             print("iceberg_spark: JVM crypto probe failed, using pyarrow "
                   f"crypto fallback: {type(e).__name__}", file=sys.stderr)
         finally:
-            import shutil
-
             shutil.rmtree(d, ignore_errors=True)
     _session_state[key] = ok
     return ok

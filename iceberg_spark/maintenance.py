@@ -38,6 +38,7 @@ from .manifests import (
     read_manifest_list,
 )
 from .metadata import OP_REPLACE, SnapshotRef, MAIN_BRANCH
+from .metrics_reporting import job_description
 from .scan import FILE_PATH_COL, POS_COL, ScanPlan, plan_to_df
 from .writes import Overwrite, maybe_merge_manifests, write_data_files
 from .row_ops import write_position_deletes
@@ -109,6 +110,10 @@ def rewrite_data_files(table, strategy: str = "binpack", target_file_size: int =
     commit in up to `partial_progress_max_commits` independent
     RewriteFiles commits, bounding both the blast radius of a failure
     mid-compaction and the size of any single metadata swap."""
+    strategy = strategy.lower()
+    if strategy not in ("binpack", "sort", "zorder"):
+        raise ValueError(f"unknown rewrite strategy {strategy!r} "
+                         "(expected binpack, sort or zorder)")
     target = target_file_size or int(
         table.properties.get("write.target-file-size-bytes", DEFAULT_TARGET_FILE_SIZE))
     scan = table.scan(filter=filter) if filter is not None else table.scan()
@@ -172,54 +177,86 @@ def rewrite_data_files(table, strategy: str = "binpack", target_file_size: int =
            "added_data_files": tot_added,
            "rewritten_bytes": tot_bytes}
     if plan.pos_deletes or plan.eq_deletes:
-        res["dangling"] = remove_dangling_deletes(table)
+        with job_description(table.spark, "iceberg rewrite_data_files: "
+                             "remove dangling deletes"):
+            res["dangling"] = remove_dangling_deletes(table)
     return res
+
+
+def _rewrite_read(scan, plan, entries):
+    """The live rows of `entries` with every delete of the plan applied,
+    read with lineage so compacted rows keep _row_id /
+    _last_updated_sequence_number through the rewrite (format/spec.md:
+    compaction must not change row lineage)."""
+    sub = ScanPlan(entries, plan.pos_deletes, plan.eq_deletes, E.ALWAYS_TRUE,
+                   plan.snapshot, plan.report)
+    return plan_to_df(scan, sub, with_metadata_columns=False, with_lineage=True)
+
+
+def _n_out(entries, target) -> int:
+    total = sum(e.file.file_size_in_bytes for e in entries)
+    return max(1, (total + target - 1) // target)
+
+
+def _rewrite_sorted_group(table, scan, plan, entries, strategy, target,
+                          sort_by, zorder_by):
+    """sort / zorder rewrite of one group: the group's rows range-
+    partitioned into its byte-target file count."""
+    df = _rewrite_read(scan, plan, entries)
+    # explicit output-file count: sizing must come from the byte
+    # target, not whatever spark.sql.shuffle.partitions happens to be
+    n_out = _n_out(entries, target)
+    if strategy == "sort" and sort_by:
+        df = df.repartitionByRange(n_out, *[F.col(c) for c in sort_by]) \
+               .sortWithinPartitions(*[F.col(c) for c in sort_by])
+    elif strategy == "zorder" and zorder_by:
+        # per-column ranges come free from the manifest stats — no
+        # extra data pass even on a 100 TB table
+        zbounds = {}
+        for c in zorder_by:
+            los = [e.file.stats[c][0] for e in entries
+                   if e.file.stats.get(c) and e.file.stats[c][0] is not None]
+            his = [e.file.stats[c][1] for e in entries
+                   if e.file.stats.get(c) and e.file.stats[c][1] is not None]
+            if los and his:
+                zbounds[c] = (min(los), max(his))
+        zkey = zorder_key_column(df, zorder_by, table.schema, zbounds)
+        df = (df.withColumn("__zkey", zkey)
+                .repartitionByRange(n_out, F.col("__zkey"))
+                .sortWithinPartitions("__zkey")
+                .drop("__zkey"))
+    return write_data_files(table, df, distribution="none",
+                            preserve_lineage=True)
 
 
 def _rewrite_commit(table, scan, plan, to_rewrite, strategy, target,
                     sort_by, zorder_by):
     """Rewrite one batch of file groups and commit it as one
-    RewriteFiles; returns (n_rewritten, n_added, bytes_rewritten)."""
-    rewritten, added_all = [], []
-    max_seq = 0
-    for entries in to_rewrite:
-        sub = ScanPlan(entries, plan.pos_deletes, plan.eq_deletes, E.ALWAYS_TRUE,
-                       plan.snapshot, plan.report)
-        # read with lineage so compacted rows keep _row_id /
-        # _last_updated_sequence_number through the rewrite (format/spec.md:
-        # compaction must not change row lineage)
-        df = plan_to_df(scan, sub, with_metadata_columns=False, with_lineage=True)
-        total = sum(e.file.file_size_in_bytes for e in entries)
-        n_out = max(1, (total + target - 1) // target)
+    RewriteFiles; returns (n_rewritten, n_added, bytes_rewritten).
+
+    binpack reads the whole batch as one frame and writes it with one
+    hash-distributed write: each partition value goes to one task, so
+    the batch writes one file per partition value (an unpartitioned
+    spec coalesces to the byte-target file count instead). sort and
+    zorder range-partition each group on its own."""
+    rewritten = [e for entries in to_rewrite for e in entries]
+    desc = (f"iceberg rewrite_data_files: {len(to_rewrite)} groups, "
+            f"{len(rewritten)} files")
+    with job_description(table.spark, desc):
         if strategy == "binpack":
-            df = df.coalesce(n_out)
-        if strategy == "sort" and sort_by:
-            # explicit output-file count: sizing must come from the byte
-            # target, not whatever spark.sql.shuffle.partitions happens to be
-            df = df.repartitionByRange(n_out, *[F.col(c) for c in sort_by]) \
-                   .sortWithinPartitions(*[F.col(c) for c in sort_by])
-        elif strategy == "zorder" and zorder_by:
-            # per-column ranges come free from the manifest stats — no
-            # extra data pass even on a 100 TB table
-            zbounds = {}
-            for c in zorder_by:
-                los = [e.file.stats[c][0] for e in entries
-                       if e.file.stats.get(c) and e.file.stats[c][0] is not None]
-                his = [e.file.stats[c][1] for e in entries
-                       if e.file.stats.get(c) and e.file.stats[c][1] is not None]
-                if los and his:
-                    zbounds[c] = (min(los), max(his))
-            zkey = zorder_key_column(df, zorder_by, table.schema, zbounds)
-            df = (df.withColumn("__zkey", zkey)
-                    .repartitionByRange(n_out, F.col("__zkey"))
-                    .sortWithinPartitions("__zkey")
-                    .drop("__zkey"))
-        added = write_data_files(table, df, distribution="none"
-                                 if strategy in ("sort", "zorder") else None,
-                                 preserve_lineage=True)
-        added_all.extend(added)
-        rewritten.extend(entries)
-        max_seq = max(max_seq, max(e.sequence_number for e in entries))
+            df = _rewrite_read(scan, plan, rewritten)
+            if not table.metadata.spec.fields:
+                df = df.coalesce(sum(_n_out(entries, target)
+                                     for entries in to_rewrite))
+            added_all = write_data_files(table, df, distribution="hash",
+                                         preserve_lineage=True)
+        else:
+            added_all = []
+            for entries in to_rewrite:
+                added_all += _rewrite_sorted_group(
+                    table, scan, plan, entries, strategy, target,
+                    sort_by, zorder_by)
+    max_seq = max(e.sequence_number for e in rewritten)
 
     removed = {e.file.file_path for e in rewritten}
     # rewriting applied the deletes; delete files referencing removed data

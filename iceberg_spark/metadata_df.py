@@ -245,6 +245,25 @@ def distinct_write_schema_ids(spark: SparkSession, manifests) -> set:
             for r in df.select("write_schema_id").distinct().collect()}
 
 
+def plain_manifests_df(spark, manifests) -> DataFrame:
+    """Every column of the given plaintext manifests, read as one
+    manifest-fed relation. The schema is the union of the manifests'
+    footers, read through FileIO before the Spark read: columns a newer
+    manifest added read as null from older ones, and promoted stats
+    columns widen. Unlike `spark.read.option("mergeSchema", ...)`, no
+    footer job, no listing job and no glob expansion of the paths."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from .io import read_parquet_schema
+
+    paths = [mf.path for mf in manifests]
+    merged = pa.unify_schemas([read_parquet_schema(p) for p in paths],
+                              promote_options="permissive")
+    return files_df(spark, "parquet", from_arrow_schema(merged), paths,
+                    {mf.path: mf.length for mf in manifests})
+
+
 def collect_entries_spark(table, manifests, row_filter=None,
                           statuses=None) -> list:
     """Collect full ManifestEntry objects through a Spark read of the given
@@ -274,10 +293,10 @@ def collect_entries_spark(table, manifests, row_filter=None,
                     out.append(e)
     by_spec: dict = {}
     for mf in manifests:
-        by_spec.setdefault(mf.spec_id, []).append(mf.path)
-    for spec_id, paths in by_spec.items():
+        by_spec.setdefault(mf.spec_id, []).append(mf)
+    for spec_id, group in by_spec.items():
         spec = m.spec_by_id(spec_id)
-        df = table.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = plain_manifests_df(table.spark, group)
         if statuses is not None:
             df = df.filter(F.col("status").isin(list(statuses)))
         if row_filter is not None:
@@ -417,21 +436,21 @@ def entries_table_df(table, snapshots, statuses=None,
 def _manifest_rows_dfs(spark, group, schema, spec,
                        with_path: bool = False) -> list:
     """Raw manifest rows of one spec group as DataFrames: plaintext
-    manifests through the JVM parquet source (mergeSchema), encrypted
+    manifests through `plain_manifests_df`, encrypted
     ones through a decrypting RDD leg with the CURRENT manifest schema
     (the JVM reader cannot open AES GCM Streams). `with_path` adds a
     `__manifest_path` column naming each row's source manifest on both
     legs."""
     from .manifests import file_key, manifest_arrow_schema
 
-    plain = [mf.path for mf in group if file_key(mf.path) is None]
+    plain = [mf for mf in group if file_key(mf.path) is None]
     enc = [mf.path for mf in group if file_key(mf.path) is not None]
     dfs = []
     if plain:
-        df = spark.read.option("mergeSchema", "true").parquet(*plain)
+        df = plain_manifests_df(spark, plain)
         if with_path:
-            df = df.withColumn("__manifest_path",
-                               manifest_path_col(plain))
+            df = df.withColumn("__manifest_path", manifest_path_col(
+                [mf.path for mf in plain]))
         dfs.append(df)
     if enc:
         from pyspark.sql.pandas.types import from_arrow_schema

@@ -24,6 +24,7 @@ from __future__ import annotations
 import threading
 import time
 from collections import deque
+from contextlib import contextmanager
 
 _PER_TABLE_CAP = 128
 
@@ -169,3 +170,17 @@ def scan_reports_df(spark, table_name: str):
             _json.dumps(p, separators=(",", ":")),
         ))
     return spark.createDataFrame(rows, schema)
+
+
+@contextmanager
+def job_description(spark, text: str):
+    """Name the Spark jobs started inside the block (UI and status
+    tracker `description`); the caller's description comes back after
+    it, and the job group is left alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

@@ -30,6 +30,7 @@ from . import expressions as E
 from . import io as _fio
 from .manifests import POSITION_DELETES, collect_data_files
 from .metadata import MAIN_BRANCH, OP_DELETE, OP_OVERWRITE
+from .metrics_reporting import job_description
 from .scan import (FILE_PATH_COL, LAST_UPDATED_SEQ_COL, POS_COL, ROW_ID_COL,
                    ScanPlan, TableScan, plan_to_df)
 from .writes import (Overwrite, RowDelta, partition_values_from_path,
@@ -187,7 +188,8 @@ def delete_where(table, expr: E.Expr, mode: Optional[str] = None,
                         validate_from_snapshot_id=fid).commit()
 
 
-def write_row_deletes(table, matched_df: DataFrame, plan=None):
+def write_row_deletes(table, matched_df: DataFrame, plan=None,
+                      affected: Optional[set] = None):
     """Route row-level delete rows to the table's delete encoding.
 
     Default: v2 parquet position-delete files. With table property
@@ -201,6 +203,9 @@ def write_row_deletes(table, matched_df: DataFrame, plan=None):
     it references, become DVs — and removed in the same commit, because
     v3 forbids position-delete files coexisting with deletion vectors on
     one data file (format/spec.md:1384).
+
+    `affected`, when the caller already knows it, is the set of data
+    files that receive delete rows (saves a pass over `matched_df`).
 
     Returns (delete_files, removed_delete_refs)."""
     fmt = (table.metadata.properties.get("write.delete.format", "")
@@ -217,8 +222,9 @@ def write_row_deletes(table, matched_df: DataFrame, plan=None):
     if plan is not None and plan.pos_deletes:
         spark = table.spark
         # affected = files that get a new DV this commit (plan-sized)
-        affected = {r["file_path"] for r in
-                    rows.select("file_path").distinct().collect()}
+        if affected is None:
+            affected = {r["file_path"] for r in
+                        rows.select("file_path").distinct().collect()}
         affected_rel = {_data_rel(p) for p in affected}
         # prior delete contents carry write-time paths; map them onto
         # the live paths via the plan's (suffix -> current) broadcast
@@ -747,42 +753,17 @@ class MergeBuilder:
         scan = table.scan()
         plan = scan.plan_files()
 
-        tgt_all = plan_to_df(scan, plan, with_metadata_columns=True).alias("t")
         src = self.source.withColumn("__s_present", F.lit(True)).alias("s")
         join_cond = self._join_cond()
-
-        # affected files: files containing at least one matched row; with
-        # not-matched-by-source clauses every live file is affected
-        if self._not_matched_by_source:
-            affected_paths = {e.file.file_path for e in plan.files}
-        else:
-            affected_paths = {
-                r[0]
-                for r in tgt_all.join(src, join_cond, "left_semi")
-                .select(FILE_PATH_COL).distinct().collect()
-            }
-
-        if check_cardinality and self._matched:
-            dup = (
-                tgt_all.join(src, join_cond, "inner")
-                .groupBy(F.col(f"t.{FILE_PATH_COL}"), F.col(f"t.{POS_COL}"))
-                .count().filter(F.col("count") > 1).limit(1).count()
-            )
-            if dup:
-                raise ValueError(
-                    "MERGE cardinality violation: a target row matches multiple source rows"
-                )
-
-        affected_entries = [e for e in plan.files if e.file.file_path in affected_paths]
-        tgt = _subplan_df(table, scan, plan, affected_entries, with_meta=True).alias("t") \
-            if affected_entries else None
+        # the reference checks every matched target row, whatever the
+        # clause conditions say, unless no matched clause exists
+        check = check_cardinality and bool(self._matched)
 
         matched_any = F.col("__s_present").isNotNull()
+        t_exists = F.col(f"t.{POS_COL}").isNotNull()
 
         def build_action(joined):
-            act = None
             chain = F.when(F.lit(False), F.lit(""))
-            t_exists = F.col(f"t.{POS_COL}").isNotNull()
             for i, (kind, cond, _setmap) in enumerate(self._matched):
                 c = matched_any & t_exists
                 if cond is not None:
@@ -829,67 +810,116 @@ class MergeBuilder:
             F.when(F.col("__action") == "K", F.col(f"t.{LAST_UPDATED_SEQ_COL}"))
             .otherwise(F.lit(None).cast("long")).alias(LAST_UPDATED_SEQ_COL),
         ]
+        iso, fid = _isolation(table, "merge"), _from_id(plan)
 
         if m == COPY_ON_WRITE:
-            if tgt is not None:
-                joined = tgt.join(src, join_cond, "full_outer")
-            else:
-                joined = (
-                    plan_to_df(scan, ScanPlan([], [], [], E.ALWAYS_TRUE, plan.snapshot,
-                                              plan.report), True, with_lineage=True)
-                    .alias("t").join(src, join_cond, "full_outer")
-                )
-            routed = build_action(joined)
+            tgt = plan_to_df(scan, plan, with_metadata_columns=True).alias("t")
+            # affected files: files holding at least one matched row; with
+            # not-matched-by-source clauses every live file is affected
+            affected_paths = {e.file.file_path for e in plan.files}
+            if check or not self._not_matched_by_source:
+                with job_description(table.spark, "iceberg MERGE: match"):
+                    hit = _merge_target_files(
+                        tgt.join(src, join_cond, "inner").select(
+                            F.col(f"t.{FILE_PATH_COL}").alias(FILE_PATH_COL),
+                            F.col(f"t.{POS_COL}").alias(POS_COL),
+                            F.lit(True).alias("__matched"),
+                            F.lit(True).alias("__hit")), check)
+                if not self._not_matched_by_source:
+                    affected_paths = hit
+            affected_entries = [e for e in plan.files
+                                if e.file.file_path in affected_paths]
+            tgt = _subplan_df(table, scan, plan, affected_entries,
+                              with_meta=True).alias("t")
+            routed = build_action(tgt.join(src, join_cond, "full_outer"))
             routed = routed.filter(~F.col("__action").startswith("D")
                                    & ~F.col("__action").startswith("ND")
                                    & (F.col("__action") != "X"))
             result = routed.select(*[out_col(c) for c in cols], *lineage_out)
-            added = write_data_files(table, result, preserve_lineage=True)
+            with job_description(table.spark, "iceberg MERGE: write data"):
+                added = write_data_files(table, result, preserve_lineage=True)
             # conflict filter = whole table (the reference's default MERGE
             # conflictDetectionFilter): serializable aborts on any
             # concurrent append, both levels abort on deletes that the
             # rewrite would lose
             return Overwrite(table, added, affected_paths, operation=OP_OVERWRITE,
-                             branch=branch,
-                             isolation=_isolation(table, "merge"),
-                             validate_from_snapshot_id=_from_id(plan),
+                             branch=branch, isolation=iso,
+                             validate_from_snapshot_id=fid,
                              validate_new_deletes_for=affected_paths).commit()
-        else:
-            # MoR: matched update/delete rows -> pos deletes (+ reinsert rows);
-            # inserts -> data files
-            if tgt is None:
-                joined = src.withColumn(f"t.{POS_COL}", F.lit(None))
-                inserts = build_action(
-                    plan_to_df(scan, ScanPlan([], [], [], E.ALWAYS_TRUE, plan.snapshot,
-                                              plan.report), True, with_lineage=True)
-                    .alias("t").join(src, join_cond, "full_outer")
-                )
-            else:
-                inserts = build_action(tgt.join(src, join_cond, "full_outer"))
-            routed = inserts
-            spec = table.metadata.spec
-            psrc = [table.schema.field_by_id(pf.source_id).name
-                    for pf in spec.fields]
-            del_rows = routed.filter(
-                F.col("__action").startswith("U") | F.col("__action").startswith("D")
-                | F.col("__action").startswith("NU") | F.col("__action").startswith("ND")
-            ).select(F.col(f"t.{FILE_PATH_COL}").alias(FILE_PATH_COL),
-                     F.col(f"t.{POS_COL}").alias(POS_COL),
-                     # partition sources ride along so delete files fan out
-                     # by the target partition (spec partition tuple)
-                     *[F.col(f"t.{c}").alias(c) for c in psrc])
-            pos_files, removed_refs = write_row_deletes(table, del_rows, plan)
-            new_rows = routed.filter(
-                F.col("__action").startswith("U") | F.col("__action").startswith("I")
-                | F.col("__action").startswith("NU")
-            ).select(*[out_col(c) for c in cols], *lineage_out)
-            data_files = write_data_files(table, new_rows, preserve_lineage=True)
-            return RowDelta(table, data_files, pos_files, branch=branch,
-                            referenced_files=set(affected_paths),
-                            removed_delete_refs=removed_refs,
-                            isolation=_isolation(table, "merge"),
-                            validate_from_snapshot_id=_from_id(plan),
-                            validate_new_deletes_for=set(affected_paths)).commit()
+
+        # MoR: one join of the whole target with the source routes every
+        # row; only the rows that change something (plus matched rows,
+        # for the cardinality check) are kept, and both writes read them.
+        # Matched update/delete rows -> position deletes (+ reinsert rows);
+        # inserts -> data files.
+        tgt = plan_to_df(scan, plan, with_metadata_columns=True,
+                         with_lineage=True).alias("t")
+        how = "full_outer" if self._not_matched_by_source else "right_outer"
+        routed = build_action(tgt.join(src, join_cond, how))
+        spec = table.metadata.spec
+        psrc = [table.schema.field_by_id(pf.source_id).name
+                for pf in spec.fields]
+        act = F.col("__action")
+        deletes = (act.startswith("U") | act.startswith("D")
+                   | act.startswith("NU") | act.startswith("ND"))
+        inserts = (act.startswith("U") | act.startswith("I")
+                   | act.startswith("NU"))
+        matched = matched_any & t_exists
+        keep = deletes | inserts | matched if check else deletes | inserts
+        rows = routed.filter(keep).select(
+            act.alias("__action"), matched.alias("__matched"),
+            deletes.alias("__hit"),
+            F.col(f"t.{FILE_PATH_COL}").alias(FILE_PATH_COL),
+            F.col(f"t.{POS_COL}").alias(POS_COL),
+            # the target row's partition sources, so delete files fan out
+            # by the target partition (spec partition tuple)
+            *[F.col(f"t.{c}").alias(f"__t_{c}") for c in psrc],
+            *[out_col(c) for c in cols], *lineage_out).persist()
+        try:
+            with job_description(table.spark, "iceberg MERGE: route"):
+                affected = _merge_target_files(rows, check)
+            pos_files, removed_refs = [], set()
+            if affected:
+                del_rows = rows.filter(F.col("__hit")).select(
+                    FILE_PATH_COL, POS_COL,
+                    *[F.col(f"__t_{c}").alias(c) for c in psrc])
+                with job_description(table.spark, "iceberg MERGE: write deletes"):
+                    pos_files, removed_refs = write_row_deletes(
+                        table, del_rows, plan, affected=affected)
+            new_rows = rows.filter(inserts).select(
+                *cols, ROW_ID_COL, LAST_UPDATED_SEQ_COL)
+            with job_description(table.spark, "iceberg MERGE: write data"):
+                data_files = write_data_files(table, new_rows,
+                                              preserve_lineage=True)
+        finally:
+            rows.unpersist(blocking=True)
+        # the files that receive delete rows: a concurrent delete on one
+        # of them could be resurrected by a reinserted row, and a
+        # concurrent removal would leave the new deletes dangling
+        return RowDelta(table, data_files, pos_files, branch=branch,
+                        referenced_files=affected,
+                        removed_delete_refs=removed_refs,
+                        isolation=iso, validate_from_snapshot_id=fid,
+                        validate_new_deletes_for=affected).commit()
+
+
+def _merge_target_files(rows: DataFrame, check: bool) -> set:
+    """One aggregate per target file over MERGE rows carrying
+    `_file`, `_pos`, `__matched` and `__hit`: raises the cardinality
+    error when one target row matched more than one source row (before
+    anything is written), and returns the files with a `__hit` row."""
+    aggs = [F.max(F.col("__hit").cast("int")).alias("hit")]
+    if check:
+        aggs += [F.count(F.when(F.col("__matched"), 1)).alias("n"),
+                 F.countDistinct(F.when(F.col("__matched"), F.col(POS_COL)))
+                 .alias("d")]
+    stats = (rows.filter(F.col(FILE_PATH_COL).isNotNull())
+             .groupBy(FILE_PATH_COL).agg(*aggs).collect())
+    if check and any(r["n"] > r["d"] for r in stats):
+        raise ValueError(
+            "MERGE cardinality violation: a target row matches multiple source rows"
+        )
+    return {r[FILE_PATH_COL] for r in stats if r["hit"]}
 
 
 def _merge_value(mapping, col, default, source_alias="s", insert=False, source_cols=None):

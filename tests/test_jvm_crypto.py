@@ -98,3 +98,53 @@ def test_python_written_files_read_by_jvm(spark, tmp_path):
     plan = sdf._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in plan  # native reader over pyarrow files
     assert sdf.count() == 100
+
+
+def _fresh_tmpdir(monkeypatch, path):
+    import tempfile
+
+    path.mkdir()
+    monkeypatch.setenv("TMPDIR", str(path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # gettempdir re-reads
+
+
+def test_helper_jar_cached_across_temp_dirs(tmp_path, monkeypatch):
+    """The compiled jar lives in the per-user cache, so a process with a
+    fresh TMPDIR reuses it instead of running javac again."""
+    import subprocess
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    _fresh_tmpdir(monkeypatch, tmp_path / "t1")
+    monkeypatch.setattr(JC, "_jar_path_cache", [])
+    first = JC._build_jar()
+    if first is None:
+        pytest.skip("no JDK to compile the helper jar")
+    assert first.startswith(str(tmp_path / "cache"))
+    # only the published jar remains: the private build dir is gone
+    assert os.listdir(os.path.dirname(first)) == ["iceberg-spark-kms.jar"]
+
+    _fresh_tmpdir(monkeypatch, tmp_path / "t2")
+    monkeypatch.setattr(JC, "_jar_path_cache", [])
+    calls = []
+    real_run = subprocess.run
+
+    def counting_run(*a, **kw):
+        calls.append(a)
+        return real_run(*a, **kw)
+
+    monkeypatch.setattr(subprocess, "run", counting_run)
+    assert JC._build_jar() == first
+    assert calls == []
+
+
+def test_helper_jar_falls_back_to_temp_dir(tmp_path, monkeypatch):
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(blocker))
+    _fresh_tmpdir(monkeypatch, tmp_path / "t")
+    monkeypatch.setattr(JC, "_jar_path_cache", [])
+    jar = JC._build_jar()
+    if jar is None:
+        pytest.skip("no JDK to compile the helper jar")
+    assert jar.startswith(str(tmp_path / "t"))
+    assert os.path.exists(jar)

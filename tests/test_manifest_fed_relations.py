@@ -2,8 +2,10 @@
 and sizes the manifests record, with no listing and no glob expansion.
 
 - A table under a location holding glob characters reads back through
-  local and distributed planning, after a merge-on-read DELETE, and as
-  ORC (`spark.read.load` expanded `[x]` as a glob: PATH_NOT_FOUND).
+  local and distributed planning, after a merge-on-read DELETE, through
+  the files, entries, all_files, all_entries and partitions metadata
+  tables, and as ORC (`spark.read.load` expanded `[x]` as a glob:
+  PATH_NOT_FOUND).
 - The builder trusts recorded sizes, so every writer must record the
   size on disk: data files from append, add_files, compaction and
   merge-on-read position/equality-delete writes, and the manifests
@@ -72,11 +74,46 @@ def test_glob_characters_in_table_location(spark, tmp_path):
     df = t.to_df()
     assert df.count() == 70
     assert df.filter(F.col("id") == 50).select("v").collect()[0][0] == -1.0
+    # metadata tables read every manifest column under the same location
+    plan = t.scan().plan_files()
+    live = len(plan.files) + len(plan.pos_deletes) + len(plan.eq_deletes)
+    assert t.metadata_table("files").count() == live
+    entries = t.metadata_table("entries").count()
+    assert entries >= live
+    assert t.metadata_table("all_files").count() >= live
+    assert t.metadata_table("all_entries").count() >= entries
+    parts = t.metadata_table("partitions")
+    assert parts.count() == 5
+    # the upsert's equality delete is unpartitioned, so no partition
+    # row counts it
+    assert parts.agg(F.sum("delete_file_count")).collect()[0][0] \
+        == len(plan.pos_deletes)
     # ORC: the write-side metrics pass reads the new files back too
     o = cat.create_table("db.globby_orc", _rows(spark, 0, 1).schema,
                          properties={"write.format.default": "orc"})
     o.append(_rows(spark, 0, 40))
     assert o.refresh().to_df().count() == 40
+
+
+def test_metadata_tables_across_type_promotion(spark, tmp_path):
+    """Manifests written before an int -> long promotion hold int32
+    stats columns; the merged manifest schema widens them (Spark's
+    mergeSchema refused to merge int with long)."""
+    from pyspark.sql import types as T
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    small = T.StructType([T.StructField("id", T.IntegerType())])
+    t = cat.create_table("db.promo", small)
+    t.append(spark.createDataFrame([(1,), (2,)], small))
+    t.refresh().update_schema().update_column("id", "long").commit()
+    t = t.refresh()
+    t.append(spark.createDataFrame(
+        [(3 << 40,)], T.StructType([T.StructField("id", T.LongType())])))
+    t = t.refresh()
+    n = len(t.scan().plan_files().files)
+    assert t.metadata_table("files").count() == n
+    assert t.metadata_table("all_entries").count() == n
+    assert t.metadata_table("partitions").collect()[0]["record_count"] == 3
 
 
 def _manifests(t):
