@@ -66,10 +66,6 @@ def _write_long(out: io.BytesIO, v: int):
             break
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63) if v >= 0 else ((-v) << 1) - 1
-
-
 # ---------------------------------------------------------------------------
 # schema-driven decode
 # ---------------------------------------------------------------------------

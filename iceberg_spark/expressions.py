@@ -265,6 +265,15 @@ def not_(e: Expr) -> Expr:
     return rewrite_not(Not(e))
 
 
+def conjuncts(e: Expr):
+    """The top-level AND terms of `e`, left to right."""
+    if isinstance(e, And):
+        yield from conjuncts(e.left)
+        yield from conjuncts(e.right)
+    else:
+        yield e
+
+
 def rewrite_not(e: Expr) -> Expr:
     """Push NOT to the leaves (De Morgan). Reference RewriteNot.java."""
     if isinstance(e, Not):
@@ -581,25 +590,6 @@ def to_sql(expr: Expr) -> str:
         if op == NOT_STARTS_WITH:
             return f"{name} NOT LIKE {_sql_lit(lits[0] + '%')}"
     raise TypeError(f"cannot sql-ify {expr!r}")
-
-
-# referenced columns --------------------------------------------------------
-
-
-def referenced_columns(expr: Expr) -> set:
-    out: set = set()
-
-    def walk(e):
-        if isinstance(e, (And, Or)):
-            walk(e.left)
-            walk(e.right)
-        elif isinstance(e, Not):
-            walk(e.child)
-        elif isinstance(e, (Predicate, BoundPredicate)):
-            out.add(e.term.name)
-
-    walk(expr)
-    return out
 
 
 # evaluation on plain rows (partition tuples) -------------------------------

@@ -80,7 +80,9 @@ def scan_report_json(table_name: str, report, snapshot_id: int,
         "metrics": {
             "total-data-manifests": _counter(report.total_manifests),
             "skipped-data-manifests": _counter(report.skipped_manifests),
-            "total-planning-duration": {"unit": "ms", "value": 0},
+            "total-planning-duration": {
+                "unit": "ms",
+                "value": round(report.total_planning_duration_ms, 3)},
             "skipped-data-files": _counter(report.skipped_data_files),
             "result-data-files": _counter(report.result_data_files),
             "result-delete-files": _counter(report.result_delete_files),

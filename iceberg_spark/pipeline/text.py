@@ -23,10 +23,6 @@ STOPWORDS = {
 }
 
 
-def _in_list(t, words):
-    return t.isin(*words)
-
-
 def _featurized(spark, sf_dir):
     """Per-doc token stats — shared subplan (single projection, no shuffle)."""
     docs = engine_docs(spark, sf_dir)

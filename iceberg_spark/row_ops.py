@@ -66,10 +66,6 @@ def _from_id(plan: ScanPlan):
     return plan.snapshot.snapshot_id if plan.snapshot is not None else -1
 
 
-def _candidate_plan(table, expr: E.Expr) -> ScanPlan:
-    return table.scan(filter=expr).plan_files()
-
-
 def _subplan_df(table, scan: TableScan, plan: ScanPlan, entries, with_meta=True,
                 with_lineage=True) -> DataFrame:
     sub = ScanPlan(list(entries), plan.pos_deletes, plan.eq_deletes,

@@ -22,6 +22,7 @@ by keyed anti-join scoped to `data_seq < delete_seq` (format/spec.md:1415).
 from __future__ import annotations
 
 import os
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 _PLAN_EXECUTOR = None
@@ -101,6 +102,7 @@ class ScanReport:
     result_data_files: int = 0
     result_delete_files: int = 0
     planning_mode: str = "local"
+    total_planning_duration_ms: float = 0.0
     # log-safe filter description (ExpressionUtil.toSanitizedString): literal
     # values replaced by magnitude/type/hash descriptions
     filter_sanitized: str = "true"
@@ -117,10 +119,6 @@ class ScanPlan:
     residual: E.Expr
     snapshot: Optional[Snapshot]
     report: ScanReport
-    # set on split-produced sub-plans: every file is dirty/clear by
-    # construction, so plan_to_df's recursion must not re-run the
-    # O(files x deletes) per-file applicability sweep on them
-    no_split: bool = False
 
 
 class TableScan:
@@ -200,6 +198,7 @@ class TableScan:
 
     # -- planning -----------------------------------------------------------
     def plan_files(self) -> ScanPlan:
+        t0 = time.perf_counter()
         report = ScanReport()
         snap = self.snapshot
         if snap is None:  # empty table
@@ -286,20 +285,15 @@ class TableScan:
             eq_del = [d for d in eq_del if d.sequence_number > min_data_seq]
             if pos_del:
                 # skip delete files that cannot reference any surviving data
-                # file: exact match for DVs (referenced_data_file), file_path
-                # min/max range intersection otherwise (delete files are
-                # range-clustered by file_path at write). Mirrors the
-                # "unrelated delete" case of IcebergSourceParquetWith-
-                # UnrelatedDeleteBenchmark / DeleteFileIndex lookup.
-                import bisect
-
+                # file (_pos_reach). Mirrors the "unrelated delete" case of
+                # IcebergSourceParquetWithUnrelatedDeleteBenchmark /
+                # DeleteFileIndex lookup.
                 # compare location-independent `data/...` suffixes: delete
                 # file contents/stats carry write-time absolute paths that
                 # go stale when a relative-path table is relocated. All
                 # paths in one delete file share the table-root prefix, so
                 # stripping it preserves min/max ordering.
                 live = sorted(_data_rel(e.file.file_path) for e in data_entries)
-                live_set = set(live)
                 # partition-bucketed lookup (DeleteFileIndex.java): a
                 # partition-scoped delete file only applies to data files
                 # in the same partition of the same spec. Pruning is legal
@@ -324,14 +318,8 @@ class TableScan:
                             and live_specs == {d.file.spec_id}
                             and key not in live_parts):
                         return False
-                    if d.file.referenced_data_file:
-                        return _data_rel(d.file.referenced_data_file) in live_set
-                    st = d.file.stats.get("file_path")
-                    if st and st[0] is not None and st[1] is not None:
-                        lo, hi = _data_rel(st[0]), _data_rel(st[1])
-                        i = bisect.bisect_left(live, lo)
-                        return i < len(live) and live[i] <= hi
-                    return True
+                    reach = _pos_reach(d, live)
+                    return reach is None or reach[0] < reach[1]
 
                 pos_del = [d for d in pos_del if may_apply(d)]
             if eq_del:
@@ -398,6 +386,7 @@ class TableScan:
 
         report.result_data_files = len(data_entries)
         report.result_delete_files = len(pos_del) + len(eq_del)
+        report.total_planning_duration_ms = (time.perf_counter() - t0) * 1e3
         # MetricsReporter loop (reference ScanReport -> reporter): every
         # plan lands in the bounded in-memory sink, surfaced by the
         # `scan_reports` metadata table. Loss-tolerant by contract —
@@ -962,12 +951,22 @@ def _eq_key_runs(keys, ftype: str, cap: int):
     return runs
 
 
-def _conf_int(spark, key: str, default: int) -> int:
-    v = spark.conf.get(key, None)
-    return int(v) if v is not None else default
+def _bounded_put(cache: dict, cap: int, key, value, on_evict=None):
+    """Store `value` as the newest entry of `cache`, first evicting the
+    oldest entries (dict order) so at most `cap` remain; `on_evict`
+    sees each evicted value. One entry goes at a time: a session that
+    cycles through more than `cap` keys must not lose the whole cache
+    to a wholesale clear()."""
+    cache.pop(key, None)
+    while cache and len(cache) >= cap:
+        old = cache.pop(next(iter(cache)))
+        if on_evict is not None:
+            on_evict(old)
+    cache[key] = value
+    return value
 
 
-# (session id, sorted delete-file paths, column name) -> filter Column.
+# (session id, sorted delete-file paths, column name) -> (filter, tier).
 # Delete files are immutable (uuid-named, never rewritten in place), so
 # the literal NOT-IN filter built from them can be reused across every
 # re-plan of the same snapshot — building 1500 Literal objects through
@@ -993,16 +992,14 @@ _RELATION_CACHE_STATS = {"hits": 0, "misses": 0}
 def _cached_file_df(spark, ffmt: str, read_schema, paths, sizes):
     key = (spark.sparkContext.applicationId, ffmt, str(read_schema),
            tuple(paths))
-    df = _RELATION_CACHE.pop(key, None)
+    df = _RELATION_CACHE.get(key)
     if df is None:
         _RELATION_CACHE_STATS["misses"] += 1
-        while len(_RELATION_CACHE) >= _RELATION_CACHE_CAP:
-            _RELATION_CACHE.pop(next(iter(_RELATION_CACHE)))
         df = _rel.files_df(spark, ffmt, read_schema, paths, sizes)
     else:
         _RELATION_CACHE_STATS["hits"] += 1
-    _RELATION_CACHE[key] = df  # (re)insert at most-recent position
-    return df
+    # (re)insert at the most-recent position
+    return _bounded_put(_RELATION_CACHE, _RELATION_CACHE_CAP, key, df)
 
 
 # Delete-content cache (reference SparkExecutorCache: spark/v4.0/.../
@@ -1018,19 +1015,21 @@ _DELETE_BUILD_CACHE: dict = {}
 _DELETE_BUILD_CACHE_CAP = 64
 
 
+def _unpersist_quietly(df):
+    try:
+        df.unpersist(blocking=False)
+    except Exception:
+        pass
+
+
 def _delete_build_cached(spark, dels, ck_extra, builder):
     """Return builder() persisted + cached under the delete set's
-    identity, or unpersisted when caching is off / the set is too big.
+    identity, or unpersisted when the set is too big to cache.
     Cache key carries the application id (a restarted session must not
     reuse DataFrames pointing into a dead JVM) and each file's
     write-schema id (column-name mapping) — sequence numbers go in via
     ck_extra on paths that bake them into the frame."""
-    if not _conf_bool(spark, "spark.iceberg_spark.mor.deleteCacheEnabled",
-                      True):
-        return builder()
-    cap = _conf_int(spark, "spark.iceberg_spark.mor.deleteCacheBytes",
-                    DELETE_CACHE_BYTES)
-    if sum(d.file.file_size_in_bytes or 0 for d in dels) > cap:
+    if sum(d.file.file_size_in_bytes or 0 for d in dels) > DELETE_CACHE_BYTES:
         return builder()
     ck = (spark.sparkContext.applicationId, ck_extra,
           tuple(sorted((d.file.file_path, d.file.write_schema_id)
@@ -1039,23 +1038,13 @@ def _delete_build_cached(spark, dels, ck_extra, builder):
     if dd is None:
         from pyspark import StorageLevel
 
-        dd = builder().persist(StorageLevel.MEMORY_AND_DISK)
-        while len(_DELETE_BUILD_CACHE) >= _DELETE_BUILD_CACHE_CAP:
-            old = _DELETE_BUILD_CACHE.pop(next(iter(_DELETE_BUILD_CACHE)))
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
-        _DELETE_BUILD_CACHE[ck] = dd
+        dd = _bounded_put(_DELETE_BUILD_CACHE, _DELETE_BUILD_CACHE_CAP, ck,
+                          builder().persist(StorageLevel.MEMORY_AND_DISK),
+                          on_evict=_unpersist_quietly)
     return dd
 
 
-def _conf_bool(spark, key: str, default: bool) -> bool:
-    v = spark.conf.get(key, None)
-    return default if v is None else str(v).lower() == "true"
-
-
-def _eq_build_bounds_filter(dd, plan, key_cols):
+def _eq_build_bounds_filter(dd, files, key_cols):
     """DeleteFileIndex-style build-side scoping (reference core/.../
     DeleteFileIndex.java bounds intersection): delete keys outside the
     union of the scanned data files' key bounds cannot match any row,
@@ -1072,7 +1061,7 @@ def _eq_build_bounds_filter(dd, plan, key_cols):
                   if f.dataType.typeName() in ("float", "double")}
     for i, name in enumerate(key_cols):
         los, his = [], []
-        for e in plan.files:
+        for e in files:
             st = e.file.stats.get(name)
             if not st or st[0] is None or st[1] is None:
                 los = None  # a file without bounds may hold any key
@@ -1147,90 +1136,68 @@ def _eq_applies_to_file(d, e, schema, _name_cache):
     return True
 
 
+def _pos_reach(d, keys):
+    """Index range [i, j) of the files in `keys` — sorted `data/...`
+    suffixes (_data_rel) of data-file paths — that pos-delete entry `d`
+    may reference: the exact referenced_data_file (DVs), else its
+    file_path min/max bounds (delete files are range-clustered by
+    file_path at write). None when `d` is unscoped and may reference
+    anything."""
+    import bisect
+
+    if d.file.referenced_data_file:
+        rel = _data_rel(d.file.referenced_data_file)
+        i = bisect.bisect_left(keys, rel)
+        return i, i + (i < len(keys) and keys[i] == rel)
+    st = d.file.stats.get("file_path")
+    if st and st[0] is not None and st[1] is not None:
+        return (bisect.bisect_left(keys, _data_rel(st[0])),
+                bisect.bisect_right(keys, _data_rel(st[1])))
+    return None
+
+
 def _pos_deletes_for(pos_dels, entries):
     """The subset of pos-delete entries that may reference any of
-    `entries` — same per-file scoping rules the planner applies
-    (referenced_data_file exact, file_path bounds range, else keep)."""
+    `entries` (_pos_reach; unscoped deletes reach every branch)."""
     if not pos_dels:
         return []
-    import bisect
-
     live = sorted(_data_rel(e.file.file_path) for e in entries)
-    live_set = set(live)
-    out = []
-    for d in pos_dels:
-        if d.file.referenced_data_file:
-            if _data_rel(d.file.referenced_data_file) in live_set:
-                out.append(d)
-            continue
-        st = d.file.stats.get("file_path")
-        if st and st[0] is not None and st[1] is not None:
-            lo, hi = _data_rel(st[0]), _data_rel(st[1])
-            i = bisect.bisect_left(live, lo)
-            if i < len(live) and live[i] <= hi:
-                out.append(d)
-            continue
-        out.append(d)  # unscoped: conservatively reaches every branch
-    return out
+    return [d for d in pos_dels
+            if (r := _pos_reach(d, live)) is None or r[0] < r[1]]
 
 
-def _pos_split_plan(plan: ScanPlan, spark):
-    """Pos-delete twin of _eq_split_plan, for plans the inline-ranges
+def _pos_split(files, dels):
+    """Pos-delete twin of _eq_split, for branches the inline-ranges
     path cannot serve (scattered/oversized delete sets, or metadata
-    columns already materialized): attach pos deletes per data file by
-    referenced_data_file / file_path-bounds lookup and split the scan
-    so untouched files skip the anti-join probe entirely. Returns
-    (clear_plan, dirty_plan) or None."""
-    if not _conf_bool(spark, "spark.iceberg_spark.mor.posSplitScan",
-                      True):
-        return None
-    files, dels = plan.files, plan.pos_deletes
+    columns already materialized): attach pos deletes per data file
+    (_pos_reach) and split the scan so untouched files skip the
+    anti-join probe entirely. Returns (clear_files, dirty_files) or
+    None."""
     if len(files) < 2 or len(files) * len(dels) > EQ_SPLIT_MAX_PAIRS:
         return None
-    import bisect
-
     order = sorted((_data_rel(e.file.file_path), i)
                    for i, e in enumerate(files))
     keys = [k for k, _ in order]
     dirty_idx: set = set()
     for d in dels:
-        if d.file.referenced_data_file:
-            rel = _data_rel(d.file.referenced_data_file)
-            j = bisect.bisect_left(keys, rel)
-            if j < len(keys) and keys[j] == rel:
-                dirty_idx.add(order[j][1])
-            continue
-        st = d.file.stats.get("file_path")
-        if st and st[0] is not None and st[1] is not None:
-            lo, hi = _data_rel(st[0]), _data_rel(st[1])
-            j = bisect.bisect_left(keys, lo)
-            while j < len(keys) and keys[j] <= hi:
-                dirty_idx.add(order[j][1])
-                j += 1
-            continue
-        return None  # unscoped delete may reference anything: no split
+        reach = _pos_reach(d, keys)
+        if reach is None:
+            return None  # unscoped delete may reference anything: no split
+        dirty_idx.update(order[j][1] for j in range(*reach))
     if not dirty_idx or len(dirty_idx) == len(files):
         return None
-    clear = [e for i, e in enumerate(files) if i not in dirty_idx]
-    dirty = [e for i, e in enumerate(files) if i in dirty_idx]
-    clear_plan = ScanPlan(clear, [], [], plan.residual, plan.snapshot,
-                          plan.report)
-    dirty_plan = ScanPlan(dirty, dels, [], plan.residual, plan.snapshot,
-                          plan.report, no_split=True)
-    return clear_plan, dirty_plan
+    return ([e for i, e in enumerate(files) if i not in dirty_idx],
+            [e for i, e in enumerate(files) if i in dirty_idx])
 
 
-def _eq_split_plan(plan: ScanPlan, schema, spark):
+def _eq_split(files, dels, schema):
     """DeleteFileIndex analog: attach equality deletes per DATA file and
     split the scan into a CLEAR branch (files no delete can touch — read
     plain, zero anti-join probe cost) and a DIRTY branch (anti-join as
-    before). Returns (clear_plan, dirty_plan_or_None) or None when no
-    file is provably clear. At 100 TB this is the difference between
-    probing every row of the table through the delete join and probing
-    only the key-range/partition slice the deletes can reach."""
-    if not _conf_bool(spark, "spark.iceberg_spark.mor.eqSplitScan", True):
-        return None
-    files, dels = plan.files, plan.eq_deletes
+    before). Returns (clear_files, dirty_files) or None when no file is
+    provably clear. At 100 TB this is the difference between probing
+    every row of the table through the delete join and probing only the
+    key-range/partition slice the deletes can reach."""
     if len(files) < 2 or len(files) * len(dels) > EQ_SPLIT_MAX_PAIRS:
         return None
     names: dict = {}
@@ -1239,16 +1206,7 @@ def _eq_split_plan(plan: ScanPlan, schema, spark):
         (dirty if any(_eq_applies_to_file(d, e, schema, names)
                       for d in dels)
          else clear).append(e)
-    if not clear:
-        return None
-    clear_plan = ScanPlan(clear, _pos_deletes_for(plan.pos_deletes, clear),
-                          [], plan.residual, plan.snapshot, plan.report)
-    if not dirty:
-        return clear_plan, None
-    dirty_plan = ScanPlan(dirty, _pos_deletes_for(plan.pos_deletes, dirty),
-                          dels, plan.residual, plan.snapshot, plan.report,
-                          no_split=True)
-    return clear_plan, dirty_plan
+    return (clear, dirty) if clear else None
 
 
 def _eq_group_inline_cond(spark, metadata, schema, ids, dels):
@@ -1257,28 +1215,13 @@ def _eq_group_inline_cond(spark, metadata, schema, ids, dels):
     "range" (adjacency-run complement — parquet-pushable), "isin"
     (small literal NOT-IN — parquet-pushable), "probe" (compiled
     sorted-set StaticInvoke). (None, None) when only the distributed
-    anti-join can serve. Cached per (app id, strategy confs, delete
-    files, key column) — a raised/lowered cap must re-decide, not
-    replay a stale choice, and a restarted session must never reuse
-    Column handles pointing into a dead JVM."""
+    anti-join can serve. Cached per (app id, delete files, key column) —
+    a restarted session must never reuse Column handles pointing into a
+    dead JVM; code that changes a tier constant clears the cache."""
     key_col = schema.field_by_id(ids[0]).name
-    lit_bytes = _conf_int(
-        spark, "spark.iceberg_spark.mor.eqDeleteDriverBytes",
-        EQ_DELETE_DRIVER_BYTES)
-    lit_keys = _conf_int(
-        spark, "spark.iceberg_spark.mor.eqDeleteLiteralKeys",
-        EQ_DELETE_MAX_LITERAL_KEYS)
-    probe_bytes = _conf_int(
-        spark, "spark.iceberg_spark.mor.eqDeleteProbeBytes",
-        EQ_DELETE_PROBE_BYTES)
-    probe_keys = _conf_int(
-        spark, "spark.iceberg_spark.mor.eqDeleteProbeKeys",
-        EQ_DELETE_MAX_PROBE_KEYS)
-    run_cap = _conf_int(
-        spark, "spark.iceberg_spark.mor.eqDeleteRangeRuns",
-        EQ_DELETE_MAX_RANGE_RUNS)
+    lit_bytes, lit_keys = EQ_DELETE_DRIVER_BYTES, EQ_DELETE_MAX_LITERAL_KEYS
+    probe_bytes, probe_keys = EQ_DELETE_PROBE_BYTES, EQ_DELETE_MAX_PROBE_KEYS
     ck = (spark.sparkContext.applicationId,
-          lit_bytes, lit_keys, probe_bytes, probe_keys, run_cap,
           tuple(sorted(d.file.file_path for d in dels)), key_col)
     hit = _EQ_LITERAL_FILTER_CACHE.get(ck)
     if hit is not None:
@@ -1297,14 +1240,14 @@ def _eq_group_inline_cond(spark, metadata, schema, ids, dels):
         probe_ok = jvm_probe.available(spark)
     big_bytes = max(lit_bytes, probe_bytes) if probe_ok else lit_bytes
     big_keys = max(lit_keys, probe_keys) if probe_ok else lit_keys
-    lit = _eq_delete_literal_keys(metadata, schema, ids[0], dels, spark,
+    lit = _eq_delete_literal_keys(metadata, schema, ids[0], dels,
                                   big_bytes, big_keys)
     if lit is not None:
         keys, saw_null = lit
         small = (len(keys) <= lit_keys
                  and sum(d.file.file_size_in_bytes or 0
                          for d in dels) <= lit_bytes)
-        runs = _eq_key_runs(keys, ftype, run_cap)
+        runs = _eq_key_runs(keys, ftype, EQ_DELETE_MAX_RANGE_RUNS)
         c = F.col(key_col)
         if not keys:
             cond = c.isNotNull() if saw_null else F.lit(True)
@@ -1332,51 +1275,12 @@ def _eq_group_inline_cond(spark, metadata, schema, ids, dels):
             cond = jvm_probe.not_in_filter(spark, key_col, keys, ftype,
                                            saw_null)
             tier = "probe" if cond is not None else None
-    if len(_EQ_LITERAL_FILTER_CACHE) >= _EQ_LITERAL_FILTER_CACHE_CAP:
-        _EQ_LITERAL_FILTER_CACHE.clear()
-    _EQ_LITERAL_FILTER_CACHE[ck] = (cond, tier)
-    return cond, tier
+    return _bounded_put(_EQ_LITERAL_FILTER_CACHE,
+                        _EQ_LITERAL_FILTER_CACHE_CAP, ck, (cond, tier))
 
 
-# Tiers whose per-row cost is near-zero (a few comparisons / one InSet
-# lookup) AND that push into the parquet reader. For these, reading all
-# files as ONE relation with the filter everywhere beats the
-# clear/dirty split's second relation + file index + task wave — the
-# eq analog of r13's single-relation position-probe read (change #8).
-# The probe tier stays split: its per-row binary search is real money
-# on clean files at scale (memory-latency-bound on virtualized cores).
-_EQ_CHEAP_TIERS = ("trivial", "range", "isin")
-
-
-def _eq_cheap_inline_all(spark, metadata, schema, plan) -> bool:
-    """True when EVERY equality-delete group of `plan` will apply as a
-    cheap pushable scalar filter, making the clear/dirty plan split a
-    net loss. Conservative: any join-path or probe-tier group keeps
-    the split."""
-    if not _conf_bool(spark, "spark.iceberg_spark.mor.eqSingleRelation",
-                      True):
-        return False
-    if plan.pos_deletes:
-        return False  # split also routes pos deletes; keep it
-    uniform = max((e.sequence_number for e in plan.files), default=-1) \
-        < min(d.sequence_number for d in plan.eq_deletes)
-    if not uniform:
-        return False
-    by_ids: dict = {}
-    for d in plan.eq_deletes:
-        by_ids.setdefault(tuple(sorted(d.file.equality_ids)), []).append(d)
-    for ids, dels in by_ids.items():
-        if len(ids) != 1:
-            return False
-        cond, tier = _eq_group_inline_cond(spark, metadata, schema, ids,
-                                           dels)
-        if cond is None or tier not in _EQ_CHEAP_TIERS:
-            return False
-    return True
-
-
-def _eq_delete_literal_keys(metadata, schema, fid: int, dels, spark,
-                            byte_cap=None, key_cap=None):
+def _eq_delete_literal_keys(metadata, schema, fid: int, dels, byte_cap,
+                            key_cap):
     """Driver-side read of a SMALL single-column equality-delete set,
     returning (sorted key list, saw_null) — or None when the set is too
     big, encrypted with a raw footer DEK, non-parquet, or the key type
@@ -1385,22 +1289,14 @@ def _eq_delete_literal_keys(metadata, schema, fid: int, dels, spark,
     stage (and its delete-file read job) for the dominant Flink-upsert
     layout of many tiny PK delete files. The byte cap bounds driver
     memory the same way POS_DELETE_DRIVER_BYTES does; big delete sets
-    keep the distributed anti-join. Caps default to the isin-literal
-    confs; the jvm set-probe caller passes its own larger ones."""
+    keep the distributed anti-join."""
     ftype = schema.field_by_id(fid).type
     if not (isinstance(ftype, str)
             and (ftype in _EQ_LITERAL_TYPES
                  or ftype.startswith("decimal"))):
         return None
-    limit = byte_cap if byte_cap is not None else _conf_int(
-        spark, "spark.iceberg_spark.mor.eqDeleteDriverBytes",
-        EQ_DELETE_DRIVER_BYTES)
-    if sum(d.file.file_size_in_bytes or 0 for d in dels) > limit:
+    if sum(d.file.file_size_in_bytes or 0 for d in dels) > byte_cap:
         return None
-    if key_cap is None:
-        key_cap = _conf_int(spark,
-                            "spark.iceberg_spark.mor.eqDeleteLiteralKeys",
-                            EQ_DELETE_MAX_LITERAL_KEYS)
     if sum(d.file.record_count or 0 for d in dels) > key_cap:
         return None  # manifest counts pre-gate: no driver read wasted
     if any(d.file.file_format != "parquet" for d in dels):
@@ -1434,14 +1330,14 @@ def _eq_delete_literal_keys(metadata, schema, fid: int, dels, spark,
     return sorted(keys), saw_null
 
 
-def _pos_delete_bytes(plan: ScanPlan) -> int:
+def _pos_delete_bytes(dels) -> int:
     # a DV entry's cost is its blob (content_size_in_bytes), not the whole
     # Puffin file it shares with other vectors
     return sum(
         (d.file.content_size_in_bytes
          if d.file.content_size_in_bytes is not None
          else d.file.file_size_in_bytes) or 0
-        for d in plan.pos_deletes)
+        for d in dels)
 
 
 def _relation_build(data_entries, delete_entries) -> str:
@@ -1692,15 +1588,13 @@ def _entry_runs(d):
                 if not compress(_data_rel(fp), poss[idx == i], runs):
                     ok = False
                     break
-    result = ({rel: tuple(rs) for rel, rs in runs.items()}
-              if ok and runs is not None else None)
-    if len(_POS_RUNS_CACHE) >= _POS_RUNS_CACHE_CAP:
-        _POS_RUNS_CACHE.clear()
-    _POS_RUNS_CACHE[ck] = result
-    return result
+    return _bounded_put(
+        _POS_RUNS_CACHE, _POS_RUNS_CACHE_CAP, ck,
+        ({rel: tuple(rs) for rel, rs in runs.items()}
+         if ok and runs is not None else None))
 
 
-def _pos_delete_ranges(plan: ScanPlan):
+def _pos_delete_ranges(files, dels):
     """Pos-delete set compressed to per-file contiguous position runs
     (the RoaringPositionBitmap 'run' analog, core/.../deletes/
     RoaringPositionBitmap.java:51), assembled from per-entry cached
@@ -1712,10 +1606,10 @@ def _pos_delete_ranges(plan: ScanPlan):
     # table is relocated (v4, spec:194); `data/...` suffixes are stable
     # and unique within a table (uuid-named file dirs)
     rel_live = {_data_rel(e.file.file_path): e.file.file_path
-                for e in plan.files}
+                for e in files}
     cap = POS_DELETE_MAX_LITERAL_RANGES
     by_file: dict = {}
-    for d in plan.pos_deletes:
+    for d in dels:
         runs = _entry_runs(d)
         if runs is None:
             return None
@@ -1755,27 +1649,51 @@ _POS_COVER_FILTER_CACHE: dict = {}
 _POS_COVER_FILTER_CACHE_CAP = 256
 
 
-def _pos_probe_filter(spark, pos_ranges, uri_form: bool,
-                      path_expr: str = "_metadata.file_path",
-                      pos_expr: str = "_metadata.row_index"):
-    """Cached compiled 'position is deleted' Column over `pos_ranges`
-    (see jvm_probe.pos_covered_filter), or None when the probe is
-    unavailable — caller falls back to the expression chain."""
-    ck = (spark.sparkContext.applicationId, uri_form, path_expr,
-          pos_expr, tuple(pos_ranges))
-    hit = _POS_COVER_FILTER_CACHE.get(ck, False)
-    if hit is not False:
-        return hit
-    from . import jvm_probe
+def _uri_lit(fp: str) -> str:
+    """A manifest path in the `file:` URI spelling of Spark's raw
+    `_metadata.file_path`."""
+    return "file:" + fp if fp.startswith("/") else fp
 
-    path_lit = ((lambda fp: "file:" + fp if fp.startswith("/") else fp)
-                if uri_form else (lambda fp: fp))
-    cond = jvm_probe.pos_covered_filter(spark, pos_ranges, path_lit,
-                                        path_expr, pos_expr)
-    if len(_POS_COVER_FILTER_CACHE) >= _POS_COVER_FILTER_CACHE_CAP:
-        _POS_COVER_FILTER_CACHE.clear()
-    _POS_COVER_FILTER_CACHE[ck] = cond
-    return cond
+
+def _pos_deleted_cond(spark, pos_ranges, raw_meta: bool):
+    """(Column, probed): 'position is deleted' over `pos_ranges`. Runs
+    over two or more files use the cached compiled run-coverage probe
+    (jvm_probe.pos_covered_filter) — one StaticInvoke per row, memoized
+    file ordinal + binary search over (ordinal<<40)|pos-encoded runs,
+    the per-task BitmapPositionDeleteIndex probe shape (reference
+    core/.../deletes/BitmapPositionDeleteIndex.java:31). One file, or no
+    JVM helper, falls back to the _ranges_filter expression chain.
+    `raw_meta` tests Spark's raw `_metadata` struct before projection:
+    URI-spelled paths compare raw against `file:` literals when no path
+    holds a char Spark would percent-escape (zero per-row
+    transformation), else through the decoded column so %20-spelled
+    paths match the manifests' raw ones. Otherwise the test reads the
+    projected, already-normalized _file/_pos columns."""
+    files = {fp for fp, _, _ in pos_ranges}
+    if raw_meta:
+        path_expr, pos_expr = "_metadata.file_path", "_metadata.row_index"
+        invariant = all(_io.uri_encoding_invariant(p) for p in files)
+    else:
+        path_expr, pos_expr, invariant = FILE_PATH_COL, POS_COL, True
+    path_lit = _uri_lit if raw_meta else (lambda fp: fp)
+    if invariant and len(files) >= 2:
+        ck = (spark.sparkContext.applicationId, raw_meta, path_expr,
+              pos_expr, tuple(pos_ranges))
+        probe = _POS_COVER_FILTER_CACHE.get(ck, False)
+        if probe is False:
+            from . import jvm_probe
+
+            probe = _bounded_put(
+                _POS_COVER_FILTER_CACHE, _POS_COVER_FILTER_CACHE_CAP, ck,
+                jvm_probe.pos_covered_filter(spark, pos_ranges, path_lit,
+                                             path_expr, pos_expr))
+        if probe is not None:
+            return probe, True
+    if not invariant:
+        return _ranges_filter(_io.decode_spark_path_col(F.col(path_expr)),
+                              F.col(pos_expr), pos_ranges), False
+    return _ranges_filter(F.col(path_expr), F.col(pos_expr), pos_ranges,
+                          path_lit=path_lit), False
 
 
 def _ranges_filter(path_col, pos_col, pos_ranges, path_lit=lambda fp: fp):
@@ -1871,13 +1789,6 @@ def _arrow_pushdown_filter(residual, schema, wschema):
     if isinstance(residual, E.AlwaysTrue):
         return None
 
-    def conjuncts(e):
-        if isinstance(e, E.And):
-            yield from conjuncts(e.left)
-            yield from conjuncts(e.right)
-        else:
-            yield e
-
     def term_names(e, acc):
         if isinstance(e, (E.And, E.Or)):
             term_names(e.left, acc)
@@ -1892,7 +1803,7 @@ def _arrow_pushdown_filter(residual, schema, wschema):
 
     by_id = {f.field_id: f for f in wschema.fields}
     parts = []
-    for c in conjuncts(residual):
+    for c in E.conjuncts(residual):
         ok = True
         for n in term_names(c, []):
             try:
@@ -2089,77 +2000,190 @@ def _delete_file_readers(spark, ds, read_schema, with_meta: bool = False):
                                         mkey, with_meta)
 
 
-def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = False,
-               with_lineage: bool = False) -> DataFrame:
-    spark = scan.spark
-    metadata = scan.metadata
-    schema = scan.schema
-    read_cols = scan.columns or schema.column_names
+# Tiers whose per-row cost is near-zero (a few comparisons / one InSet
+# lookup) AND that push into the parquet reader. For these, reading all
+# files as ONE relation with the filter everywhere beats the
+# clear/dirty split's second relation + file index + task wave — the
+# eq analog of r13's single-relation position-probe read (change #8).
+# The probe tier stays split: its per-row binary search is real money
+# on clean files at scale (memory-latency-bound on virtualized cores).
+_EQ_CHEAP_TIERS = ("trivial", "range", "isin")
+
+
+@dataclass
+class EqGroup:
+    """How the equality deletes over one set of key fields apply."""
+
+    ids: tuple  # sorted equality field ids
+    key_cols: list  # current names of those fields
+    deletes: list  # list[ManifestEntry]
+    # "trivial" | "range" | "isin" | "probe": inline filter;
+    # "broadcast" | "shuffle": anti-join on the keys;
+    # "seq-tagged": anti-join also scoped by data seq < delete seq
+    tier: str
+    filter: object = None  # the inline tiers' Column
+
+
+@dataclass
+class ReadBranch:
+    """One union branch of a read: its data files, the deletes that can
+    reach them, and how each kind applies."""
+
+    files: list  # list[ManifestEntry] (data)
+    pos_deletes: list
+    # None (no pos deletes) | "inline": runs tested on the raw metadata
+    # struct inside the read | "post": runs tested after projection |
+    # "broadcast" | "shuffle": (file, pos) anti-join
+    pos_tier: Optional[str]
+    pos_ranges: Optional[list]  # [(file_path, lo, hi)] for inline/post
+    # every data file predates every equality delete, so the
+    # data seq < delete seq scoping is uniformly true
+    uniform_eq: bool
+    eq_groups: list  # list[EqGroup]
+    need_pos: bool  # the read projects _pos (and _file)
+    need_meta: bool  # the read projects _file
+
+
+@dataclass
+class ReadDecision:
+    """Every choice of one read, made from plan metadata (plus a driver
+    read of small delete sets for the run and literal tiers) before any
+    relation is built. `splits` lists the clear/dirty splits applied,
+    in order: "eq" (files no equality delete can reach read plain),
+    then "pos" (the same for position deletes)."""
+
+    branches: list  # list[ReadBranch], unioned in order
+    splits: list
+
+
+def _decide_read(scan: TableScan, plan: ScanPlan,
+                 with_metadata_columns: bool = False,
+                 with_lineage: bool = False) -> ReadDecision:
+    """The DeleteFileIndex half of a read (reference core/.../
+    DeleteFileIndex.java): which delete files reach which data files,
+    and how each kind applies. plan_to_df executes the result."""
+    spark, metadata, schema = scan.spark, scan.metadata, scan.schema
+    meta_cols = with_metadata_columns or with_lineage
+    by_ids: dict = {}
+    for d in plan.eq_deletes:
+        by_ids.setdefault(tuple(sorted(d.file.equality_ids)), []).append(d)
+    inline: dict = {}
+
+    def inline_tier(ids):
+        # (filter, tier) of a group applied as a scalar filter, or
+        # (None, None) when only an anti-join serves
+        if ids not in inline:
+            inline[ids] = (
+                _eq_group_inline_cond(spark, metadata, schema, ids,
+                                      by_ids[ids])
+                if len(ids) == 1 else (None, None))
+        return inline[ids]
+
+    def uniform(files, eq):
+        # Equality deletes apply to data files with seq < delete seq.
+        # When every data file predates every delete (the common layout:
+        # deletes committed after the data), the scoping predicate is
+        # uniformly true, so the per-row sequence columns — a
+        # metadata-struct projection, a broadcast seq map join, and a
+        # literal path->seq map on the delete side — can all be skipped.
+        return bool(eq) and (
+            max((e.sequence_number for e in files), default=-1)
+            < min(d.sequence_number for d in eq))
+
+    def branch(files, pos, eq, ranges, inline_pos):
+        if not pos:
+            pos_tier = None
+        elif inline_pos:
+            pos_tier = "inline"
+        elif ranges is not None:
+            pos_tier = "post"
+        elif _pos_delete_bytes(pos) <= POS_DELETE_BROADCAST_BYTES:
+            pos_tier = "broadcast"
+        else:
+            # An unfiltered scan attaches every live delete file; at 10%
+            # deleted on a large table that is billions of (path, pos)
+            # rows — too big to ship to every executor.
+            pos_tier = "shuffle"
+        uni = uniform(files, eq)
+        groups = []
+        for ids, dels in (by_ids.items() if eq and files else ()):
+            cond, tier = inline_tier(ids) if uni else (None, "seq-tagged")
+            if tier is None:
+                tier = ("broadcast" if sum(d.file.file_size_in_bytes or 0
+                                           for d in dels)
+                        <= POS_DELETE_BROADCAST_BYTES else "shuffle")
+            groups.append(EqGroup(
+                ids, [schema.field_by_id(i).name for i in ids], dels, tier,
+                cond))
+        need_pos = meta_cols or (bool(pos) and not inline_pos)
+        return ReadBranch(files, pos, pos_tier, ranges, uni, groups,
+                          need_pos, need_pos or (bool(eq) and not uni))
 
     # per-file equality-delete attachment (DeleteFileIndex analog): files
-    # no delete can touch read on a plain branch with no anti-join probe.
-    # Exception (r14): when every delete group applies as a cheap
-    # PUSHABLE scalar filter (trivial/range/isin tier), one relation
-    # with the filter on every row beats the split's second
-    # relation/file-index/task wave — see _eq_cheap_inline_all.
-    if plan.eq_deletes and plan.files and not plan.no_split \
-            and not _eq_cheap_inline_all(spark, metadata, schema, plan):
-        split = _eq_split_plan(plan, schema, spark)
+    # no delete can touch read on a plain branch with no anti-join probe
+    # — unless every group applies as a cheap pushable filter, when one
+    # relation wins (see _EQ_CHEAP_TIERS)
+    splits: list = []
+    pieces = [(plan.files, plan.pos_deletes, plan.eq_deletes, True)]
+    if plan.eq_deletes and plan.files and not (
+            not plan.pos_deletes
+            and uniform(plan.files, plan.eq_deletes)
+            and all(inline_tier(ids)[1] in _EQ_CHEAP_TIERS
+                    for ids in by_ids)):
+        split = _eq_split(plan.files, plan.eq_deletes, schema)
         if split is not None:
-            clear_plan, dirty_plan = split
-            cdf = plan_to_df(scan, clear_plan, with_metadata_columns,
-                             with_lineage)
-            if dirty_plan is None:
-                return cdf
-            return cdf.unionByName(
-                plan_to_df(scan, dirty_plan, with_metadata_columns,
-                           with_lineage))
+            clear, dirty = split
+            splits.append("eq")
+            pieces = [(clear, _pos_deletes_for(plan.pos_deletes, clear), [],
+                       True)]
+            if dirty:
+                pieces.append((dirty,
+                               _pos_deletes_for(plan.pos_deletes, dirty),
+                               plan.eq_deletes, False))
 
-    # Decide the pos-delete strategy up front: a small delete set compresses
-    # to literal position runs, which (when nothing else needs metadata
-    # columns) are applied inside each file-group read on the raw _metadata
-    # struct — materializing _metadata.row_index per row costs ~25% of a
-    # narrow scan, so skip it when a codegen'd filter suffices.
-    pos_ranges = None
-    if plan.pos_deletes:
-        driver_limit = _conf_int(
-            spark, "spark.iceberg_spark.mor.posDeleteDriverBytes",
-            POS_DELETE_DRIVER_BYTES)
-        if _pos_delete_bytes(plan) <= driver_limit:
-            pos_ranges = _pos_delete_ranges(plan)
-    inline_pos_filter = (pos_ranges is not None and not with_metadata_columns
-                         and not with_lineage and not plan.eq_deletes)
+    branches = []
+    for files, pos, eq, may_split in pieces:
+        # A small pos-delete set compresses to literal position runs,
+        # which (when nothing else needs metadata columns) apply inside
+        # each file-group read on the raw _metadata struct —
+        # materializing _metadata.row_index per row costs ~25% of a
+        # narrow scan, so skip it when a codegen'd filter suffices.
+        ranges = (_pos_delete_ranges(files, pos)
+                  if files and pos
+                  and _pos_delete_bytes(pos) <= POS_DELETE_DRIVER_BYTES
+                  else None)
+        inline_pos = ranges is not None and not meta_cols and not eq
+        if may_split and pos and not inline_pos and not eq and files:
+            # per-file pos-delete attachment for branches the inline
+            # path cannot serve: untouched files skip the anti-join /
+            # metadata-filter branch (the inline path does its own
+            # read-level clean/hit split)
+            psplit = _pos_split(files, pos)
+            if psplit is not None:
+                splits.append("pos")
+                branches.append(branch(psplit[0], [], [], None, False))
+                files = psplit[1]
+        branches.append(branch(files, pos, eq, ranges, inline_pos))
+    return ReadDecision(branches, splits)
 
-    # per-file pos-delete attachment for plans the inline path cannot
-    # serve: untouched files skip the anti-join / metadata-filter branch
-    # (the inline path below does its own read-level clean/hit split)
-    if plan.pos_deletes and not inline_pos_filter and not plan.eq_deletes \
-            and plan.files and not plan.no_split:
-        psplit = _pos_split_plan(plan, spark)
-        if psplit is not None:
-            clear_p, dirty_p = psplit
-            return plan_to_df(scan, clear_p, with_metadata_columns,
-                              with_lineage).unionByName(
-                plan_to_df(scan, dirty_p, with_metadata_columns,
-                           with_lineage))
 
-    # _pos needs parquet's _metadata.row_index; _file works for any format
-    # Equality deletes apply to data files with seq < delete seq. When
-    # every data file predates every delete (the common layout: deletes
-    # committed after the data), the scoping predicate is uniformly true,
-    # so the per-row sequence columns — a metadata-struct projection, a
-    # broadcast seq map join, and a literal path->seq map on the delete
-    # side — can all be skipped; the apply step collapses to one hash
-    # anti-join on the key columns. Decided from plan metadata alone.
-    uniform_eq = bool(plan.eq_deletes) and (
-        max((e.sequence_number for e in plan.files), default=-1)
-        < min(d.sequence_number for d in plan.eq_deletes))
+def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = False,
+               with_lineage: bool = False) -> DataFrame:
+    decision = _decide_read(scan, plan, with_metadata_columns, with_lineage)
+    out = None
+    for b in decision.branches:
+        df = _build_branch(scan, plan.residual, b, with_metadata_columns,
+                           with_lineage)
+        out = df if out is None else out.unionByName(df)
+    return out
 
-    need_pos = (with_metadata_columns or with_lineage
-                or (bool(plan.pos_deletes) and not inline_pos_filter))
-    need_meta = need_pos or (bool(plan.eq_deletes) and not uniform_eq)
 
-    if not plan.files:
+def _build_branch(scan: TableScan, residual, b: ReadBranch,
+                  with_metadata_columns: bool,
+                  with_lineage: bool) -> DataFrame:
+    spark, schema = scan.spark, scan.schema
+    if not b.files:
+        read_cols = scan.columns or schema.column_names
         spark_schema = type_to_spark(StructT(tuple(schema.find_field(c) for c in read_cols)))
         df = spark.createDataFrame([], schema=spark_schema)
         if with_metadata_columns:
@@ -2169,6 +2193,55 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
             df = (df.withColumn(ROW_ID_COL, F.lit(None).cast("long"))
                     .withColumn(LAST_UPDATED_SEQ_COL, F.lit(None).cast("long")))
         return df
+
+    out = _read_files(scan, residual, b, with_metadata_columns, with_lineage)
+    # residual filter (full filter re-applied; Catalyst pushes it to parquet)
+    if not isinstance(residual, E.AlwaysTrue):
+        out = out.filter(E.to_spark(residual))
+    if b.pos_tier == "post" and b.pos_ranges:
+        # tiny delete set but metadata columns are materialized anyway
+        # (lineage/eq-deletes/user request): codegen filter on the
+        # normalized columns, still no join and no extra Spark job
+        out = out.filter(~_pos_deleted_cond(spark, b.pos_ranges,
+                                            raw_meta=False)[0])
+    elif b.pos_tier in ("broadcast", "shuffle"):
+        out = _pos_anti_join(spark, out, b)
+    if b.eq_groups:
+        out = _apply_eq_deletes(scan, out, b)
+
+    if with_lineage:
+        # row lineage (format/spec.md:460): _row_id = file.first_row_id +
+        # position; _last_updated_sequence_number = the file's data sequence
+        # number (rows not yet rewritten carry their file's commit seq).
+        # Broadcast per-file map — file count is plan-sized, never row-sized.
+        lin_rows = [(e.file.file_path, e.file.first_row_id, e.sequence_number)
+                    for e in b.files]
+        lin_df = spark.createDataFrame(
+            lin_rows, "__lin_file string, __lin_first long, __lin_seq long")
+        out = (out.join(F.broadcast(lin_df),
+                        F.col(FILE_PATH_COL) == F.col("__lin_file"), "left")
+               .withColumn(ROW_ID_COL, F.coalesce(
+                   F.col("__mat_rid"), F.col("__lin_first") + F.col(POS_COL)))
+               .withColumn(LAST_UPDATED_SEQ_COL, F.coalesce(
+                   F.col("__mat_seq"), F.col("__lin_seq")))
+               .drop("__lin_file", "__lin_first", "__lin_seq",
+                     "__mat_rid", "__mat_seq"))
+
+    if not with_metadata_columns and b.need_meta:
+        out = out.drop(FILE_PATH_COL, POS_COL)
+    return out
+
+
+def _read_files(scan: TableScan, residual, b: ReadBranch,
+                with_metadata_columns: bool, with_lineage: bool) -> DataFrame:
+    """The branch's data files as one DataFrame: a relation per file
+    group, projected to the scan's columns by field id plus _file/_pos
+    when the branch needs them, with "inline" position-delete runs
+    applied inside each group's read."""
+    spark, metadata, schema = scan.spark, scan.metadata, scan.schema
+    read_cols = scan.columns or schema.column_names
+    need_pos, need_meta = b.need_pos, b.need_meta
+    inline_runs = b.pos_ranges if b.pos_tier == "inline" else None
 
     # group files by (write-schema, format) for field-ID column mapping.
     # Third key: identity-partition CONSTANTS — a hive-layout import's
@@ -2209,23 +2282,15 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
     # physically homogeneous or the group-level schema misreads half the
     # files. Probing is one local footer read per file, only on tables
     # whose write schema has variant columns.
-    _var_cache = _VAR_SIG_CACHE
     # companion-column presence is only consulted by the shredded-
     # predicate pushdown rewrite, which only engages when the residual
     # carries shredded-path conjuncts — gate the (JVM-fallback) footer
     # probe on that so a plain scan of a 10k-file variant table never
     # pays 10k py4j footer opens
-    def _res_conjs(e):
-        if isinstance(e, E.And):
-            yield from _res_conjs(e.left)
-            yield from _res_conjs(e.right)
-        else:
-            yield e
-
     _want_comps = any(
         isinstance(c, E.BoundPredicate)
         and getattr(c.term, "stats_name", None)
-        for c in _res_conjs(plan.residual))
+        for c in E.conjuncts(residual))
 
     def _var_sig(e):
         try:
@@ -2236,13 +2301,10 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
         if not vnames or e.file.file_format != "parquet":
             return ()
         p = e.file.file_path
-        hit = _var_cache.get(p)
+        hit = _VAR_SIG_CACHE.get(p)
         if hit is None or (_want_comps and hit[1] is None):
-            if len(_var_cache) >= _VAR_SIG_CACHE_CAP:
-                _var_cache.clear()
             try:
                 import pyarrow as _pa
-                import pyarrow.parquet as _pq
 
                 foot = _io.read_parquet_schema(p)
                 native = set()
@@ -2279,7 +2341,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                     except Exception:
                         comps = ()
                 hit = (tuple(sorted(vnames)), comps)
-            _var_cache[p] = hit
+            _bounded_put(_VAR_SIG_CACHE, _VAR_SIG_CACHE_CAP, p, hit)
         native, comps = hit
         return (native, comps if (_want_comps and comps is not None)
                 else ())
@@ -2300,7 +2362,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
         return ("raw",) if fc[0] == "raw" else fc
 
     groups: dict = {}
-    for e in plan.files:
+    for e in b.files:
         groups.setdefault(
             (e.file.write_schema_id, e.file.file_format, _ident_fills(e),
              _var_sig(e), _enc_kid(e)),
@@ -2317,7 +2379,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
         # formats (they cannot carry _row_id), but _pos-dependent reads
         # (position deletes, explicit metadata columns) must fail loudly
         group_parquet = ffmt == "parquet"
-        if not group_parquet and (with_metadata_columns or plan.pos_deletes):
+        if not group_parquet and (with_metadata_columns or b.pos_deletes):
             raise ValueError(
                 f"_pos / position deletes require parquet data files; "
                 f"{entries[0].file.file_path} is {ffmt} (use copy-on-write "
@@ -2367,17 +2429,10 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
         # the path, written in the same job), and the full residual
         # still re-applies after projection — superset-safety twice over.
         shred_pre = []
-        if group_parquet and not isinstance(plan.residual, E.AlwaysTrue):
+        if group_parquet and not isinstance(residual, E.AlwaysTrue):
             from pyspark.sql import types as _T
 
             from .schema import type_to_spark as _tts
-
-            def _conjs(e):
-                if isinstance(e, E.And):
-                    yield from _conjs(e.left)
-                    yield from _conjs(e.right)
-                else:
-                    yield e
 
             seen_shred = set()
             # physical-presence gate: every file in this group carries
@@ -2387,7 +2442,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
             # STATS from the manifest but no physical `_shred_f` column;
             # filtering a null-read column there would drop every row.
             group_comps = _vsig[1] if len(_vsig) == 2 else ()
-            for c in _conjs(plan.residual):
+            for c in E.conjuncts(residual):
                 sn = (getattr(c.term, "stats_name", None)
                       if isinstance(c, E.BoundPredicate) else None)
                 if not sn:
@@ -2415,7 +2470,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
             # below apply unchanged.
             from . import jvm_crypto
 
-            want_meta = need_meta or bool(inline_pos_filter and pos_ranges)
+            want_meta = need_meta or bool(inline_runs)
             if enc_kid[0] == "raw":
                 if not jvm_crypto.available(spark):
                     raise NotImplementedError(
@@ -2452,52 +2507,23 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                           .schema(read_schema).parquet(*paths))
                 else:
                     push = (None if want_meta else
-                            _arrow_pushdown_filter(plan.residual, schema,
+                            _arrow_pushdown_filter(residual, schema,
                                                    wschema))
                     df = _encrypted_parquet_df(spark, paths, read_schema,
                                                mkey, want_meta,
                                                arrow_filter=push)
-            if inline_pos_filter and pos_ranges:
-                affected_enc = {fp for fp, _, _ in pos_ranges}
-                deleted = None
-                if all(_io.uri_encoding_invariant(p)
-                       for p in affected_enc):
-                    if len(affected_enc) >= 2:
-                        deleted = _pos_probe_filter(spark, pos_ranges,
-                                                    uri_form=True)
-                    if deleted is None:
-                        deleted = _ranges_filter(
-                            F.col("_metadata.file_path"),
-                            F.col("_metadata.row_index"), pos_ranges,
-                            path_lit=lambda fp: (
-                                "file:" + fp if fp.startswith("/")
-                                else fp))
-                else:
-                    deleted = _ranges_filter(
-                        _io.decode_spark_path_col(
-                            F.col("_metadata.file_path")),
-                        F.col("_metadata.row_index"), pos_ranges)
-                if deleted is not None:
-                    df = df.filter(~deleted)
+            if inline_runs:
+                df = df.filter(~_pos_deleted_cond(spark, inline_runs,
+                                                  raw_meta=True)[0])
                 if not need_meta:
                     df = df.drop("_metadata")
-        elif inline_pos_filter and pos_ranges:
+        elif inline_runs:
             # apply position-delete runs on the raw metadata struct (URI
             # form, e.g. file:/x) before projection — no join, no extra
             # job, no per-row normalized-path materialization.
-            affected = {fp for fp, _, _ in pos_ranges}
-            invariant = all(_io.uri_encoding_invariant(p)
-                            for p in affected)
-            probed = None
-            if invariant and len(affected) >= 2:
-                # compiled run-coverage probe: one StaticInvoke per row
-                # (memoized file ordinal + binary search over
-                # (ordinal<<40)|pos-encoded runs) — the per-task
-                # BitmapPositionDeleteIndex probe shape (reference
-                # core/.../deletes/BitmapPositionDeleteIndex.java:31).
-                probed = _pos_probe_filter(spark, pos_ranges,
-                                           uri_form=True)
-            if probed is not None:
+            deleted, probed = _pos_deleted_cond(spark, inline_runs,
+                                                raw_meta=True)
+            if probed:
                 # ONE relation over ALL files, probe filter on every
                 # row: coveredFilePos answers false for paths outside
                 # its table (one memoized binary-search miss per file),
@@ -2509,7 +2535,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                 # shares its cache entry with the table's no-delete
                 # scans.
                 df = (_cached_file_df(spark, ffmt, read_schema, paths, sizes)
-                      .filter(~probed))
+                      .filter(~deleted))
             else:
                 # probe unavailable: per-row expression chains cost per
                 # file, so only the files that actually carry deletes
@@ -2517,6 +2543,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                 # vast majority on a large table with localized deletes
                 # — read through the unfiltered fast path and union
                 # back in.
+                affected = {fp for fp, _, _ in inline_runs}
                 clean = [p for p in paths if p not in affected]
                 hit = [p for p in paths if p in affected]
                 pieces = []
@@ -2524,23 +2551,6 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
                     pieces.append(
                         _cached_file_df(spark, ffmt, read_schema, clean, sizes))
                 if hit:
-                    # invariant paths (no char Spark would
-                    # percent-escape): compare the RAW URI column
-                    # against raw literals — zero per-row
-                    # transformation. Otherwise decode the column so
-                    # %20-spelled paths match the manifests' raw ones.
-                    if invariant:
-                        deleted = _ranges_filter(
-                            F.col("_metadata.file_path"),
-                            F.col("_metadata.row_index"), pos_ranges,
-                            path_lit=lambda fp: (
-                                "file:" + fp if fp.startswith("/")
-                                else fp))
-                    else:
-                        deleted = _ranges_filter(
-                            _io.decode_spark_path_col(
-                                F.col("_metadata.file_path")),
-                            F.col("_metadata.row_index"), pos_ranges)
                     pieces.append(
                         _cached_file_df(spark, ffmt, read_schema, hit, sizes)
                         .filter(~deleted))
@@ -2588,7 +2598,7 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
             if simple:
                 if read_cols != [f.name for f in wschema.fields]:
                     df = df.select(*read_cols)
-                parts.append((entries, df))
+                parts.append(df)
                 continue
         sel = []
         for cname in read_cols:
@@ -2641,214 +2651,122 @@ def plan_to_df(scan: TableScan, plan: ScanPlan, with_metadata_columns: bool = Fa
             else:
                 sel.append(F.lit(None).cast("long").alias("__mat_rid"))
                 sel.append(F.lit(None).cast("long").alias("__mat_seq"))
-        df = df.select(*sel)
-        parts.append((entries, df))
-
-    dfs = []
-    for entries, df in parts:
-        dfs.append(df)
-    out = dfs[0]
-    for d in dfs[1:]:
+        parts.append(df.select(*sel))
+    out = parts[0]
+    for d in parts[1:]:
         out = out.unionByName(d)
+    return out
 
-    # residual filter (full filter re-applied; Catalyst pushes it to parquet)
-    if not isinstance(plan.residual, E.AlwaysTrue):
-        out = out.filter(E.to_spark(plan.residual))
 
-    # --- apply deletes (merge-on-read) -------------------------------------
-    if plan.pos_deletes and not inline_pos_filter:
-        if pos_ranges is not None:
-            # tiny delete set but metadata columns are materialized anyway
-            # (lineage/eq-deletes/user request): codegen filter on the
-            # normalized columns, still no join and no extra Spark job
-            deleted = None
-            if len({fp for fp, _, _ in pos_ranges}) >= 2:
-                deleted = _pos_probe_filter(spark, pos_ranges,
-                                            uri_form=False,
-                                            path_expr=FILE_PATH_COL,
-                                            pos_expr=POS_COL)
-            if deleted is None:
-                deleted = _ranges_filter(F.col(FILE_PATH_COL),
-                                         F.col(POS_COL), pos_ranges)
-            if deleted is not None:
-                out = out.filter(~deleted)
-        else:
-            bcast_limit = _conf_int(
-                spark, "spark.iceberg_spark.mor.posDeleteBroadcastBytes",
-                POS_DELETE_BROADCAST_BYTES)
-            total_bytes = _pos_delete_bytes(plan)
-            # DV entries share one Puffin container path at different
-            # offsets: the blob identity must join the cache key
-            dv_ident = tuple(sorted(
-                (d.file.file_path, d.file.content_offset or 0)
-                for d in plan.pos_deletes))
-            pos_df = _delete_build_cached(
-                spark, plan.pos_deletes, ("pos", dv_ident),
-                lambda: pos_delete_rows_df(
-                    spark, plan.pos_deletes).select(
-                        F.col("file_path").alias("__del_file"),
-                        F.col("pos").alias("__del_pos")))
-            # suffix-normalized path equality (see _data_rel): survives
-            # table relocation while staying a plain hash-join key
-            anti_cond = (
-                (_data_rel_col(F.col(FILE_PATH_COL))
-                 == _data_rel_col(F.col("__del_file")))
-                & (F.col(POS_COL) == F.col("__del_pos"))
-            )
-            # An unfiltered scan attaches every live delete file; at 10%
-            # deleted on a large table that is billions of (path, pos)
-            # rows — too big to ship to every executor. Below the
-            # threshold a broadcast hash anti-join is shuffle-free; above
-            # it a shuffled-hash anti-join keyed by (file, pos) keeps
-            # every executor's share bounded (both sides cluster
-            # naturally by file path).
-            if total_bytes <= bcast_limit:
-                out = out.join(F.broadcast(pos_df), anti_cond, "left_anti")
-            else:
-                out = out.join(pos_df.hint("shuffle_hash"), anti_cond,
-                               "left_anti")
 
-    if plan.eq_deletes:
-        by_ids: dict = {}
-        for d in plan.eq_deletes:
-            by_ids.setdefault(tuple(sorted(d.file.equality_ids)), []).append(d)
-        bcast_limit = _conf_int(
-            spark, "spark.iceberg_spark.mor.posDeleteBroadcastBytes",
-            POS_DELETE_BROADCAST_BYTES)
-        if not uniform_eq:
-            # mixed sequence layout: attach data sequence numbers per file
-            # (broadcast map), anti-join per equality-field-set with
-            # per-pair seq scoping
-            seq_rows = [(e.file.file_path, e.sequence_number) for e in plan.files]
-            seq_df = spark.createDataFrame(seq_rows, ["__seq_file", "__data_seq"])
-            out = out.join(F.broadcast(seq_df), F.col(FILE_PATH_COL) == F.col("__seq_file"), "left") \
-                     .drop("__seq_file")
-        for ids, dels in by_ids.items():
-            key_cols = [schema.field_by_id(i).name for i in ids]
-            if uniform_eq and len(ids) == 1:
-                # small single-key delete sets inline as a codegen'd
-                # NOT-IN filter — no join stage, no per-scan delete-file
-                # read job, and the In predicate reaches parquet
-                # row-group stats. NULL semantics match the anti-join's
-                # eqNullSafe: a NULL row survives unless some delete row
-                # carried a NULL key.
-                cond, _tier = _eq_group_inline_cond(spark, metadata,
-                                                    schema, ids, dels)
-                if cond is not None:
-                    out = out.filter(cond)
-                    continue
-            if uniform_eq:
-                # explicit schema read (skips the inference job); deletes
-                # apply to every scanned file, so no seq columns at all.
-                # Column names must be the DELETE FILE's write-time names
-                # (field-ID mapped via its write schema): reading a
-                # pre-rename file by the current name would silently
-                # return all-NULL keys instead of failing loudly.
-                def _build_uniform(dels=dels, ids=ids):
-                    by_ws: dict = {}
-                    for d in dels:
-                        by_ws.setdefault(d.file.write_schema_id,
-                                         []).append(d)
-                    pieces = []
-                    for wsid_, ds in by_ws.items():
-                        try:
-                            wsch_ = metadata.schema_by_id(wsid_)
-                        except KeyError:
-                            wsch_ = schema
-                        wfields = [wsch_.field_by_id(i) for i in ids]
-                        dtypes = type_to_spark(StructT(tuple(wfields)))
-                        for rdf in _delete_file_readers(spark, ds, dtypes):
-                            pieces.append(rdf.select(
-                                *[F.col(wf.name).alias(f"__delk_{i}")
-                                  for i, wf in enumerate(wfields)]))
-                    dd = pieces[0]
-                    for p_ in pieces[1:]:
-                        dd = dd.unionByName(p_)
-                    return dd
+def _pos_anti_join(spark, out, b: ReadBranch):
+    # DV entries share one Puffin container path at different
+    # offsets: the blob identity must join the cache key
+    dv_ident = tuple(sorted(
+        (d.file.file_path, d.file.content_offset or 0)
+        for d in b.pos_deletes))
+    pos_df = _delete_build_cached(
+        spark, b.pos_deletes, ("pos", dv_ident),
+        lambda: pos_delete_rows_df(spark, b.pos_deletes).select(
+            F.col("file_path").alias("__del_file"),
+            F.col("pos").alias("__del_pos")))
+    # suffix-normalized path equality (see _data_rel): survives
+    # table relocation while staying a plain hash-join key
+    anti_cond = (
+        (_data_rel_col(F.col(FILE_PATH_COL))
+         == _data_rel_col(F.col("__del_file")))
+        & (F.col(POS_COL) == F.col("__del_pos"))
+    )
+    # Below the threshold a broadcast hash anti-join is shuffle-free;
+    # above it a shuffled-hash anti-join keyed by (file, pos) keeps
+    # every executor's share bounded (both sides cluster naturally by
+    # file path).
+    if b.pos_tier == "broadcast":
+        return out.join(F.broadcast(pos_df), anti_cond, "left_anti")
+    return out.join(pos_df.hint("shuffle_hash"), anti_cond, "left_anti")
 
-                dd = _delete_build_cached(spark, dels, ("eq-uniform", ids),
-                                          _build_uniform)
-                dd = _eq_build_bounds_filter(dd, plan, key_cols)
-                cond = None
-                for i, k in enumerate(key_cols):
-                    c = out[k].eqNullSafe(F.col(f"__delk_{i}"))
-                    cond = c if cond is None else (cond & c)
-                total = sum(d.file.file_size_in_bytes or 0 for d in dels)
-                if total <= bcast_limit:
-                    out = out.join(F.broadcast(dd), cond, "left_anti")
-                else:
-                    out = out.join(dd.hint("shuffle_hash"), cond, "left_anti")
-                continue
-            # write-time column names (field-ID mapped), as in the uniform
-            # path: a pre-rename delete file read by the current name
-            # would resolve to nothing (or nulls with an explicit schema)
-            def _build_seq_tagged(dels=dels, ids=ids):
-                by_ws2: dict = {}
-                for d in dels:
-                    by_ws2.setdefault(d.file.write_schema_id, []).append(d)
-                pieces2 = []
-                for wsid_, ds in by_ws2.items():
-                    try:
-                        wsch_ = metadata.schema_by_id(wsid_)
-                    except KeyError:
-                        wsch_ = schema
-                    wfields = [wsch_.field_by_id(i) for i in ids]
-                    dtypes = type_to_spark(StructT(tuple(wfields)))
-                    # tag each delete row with its file's sequence number
-                    seq_map = {d.file.file_path: d.sequence_number
-                               for d in ds}
-                    mapping = F.create_map(*[F.lit(x)
-                                             for kv in seq_map.items()
-                                             for x in kv])
-                    # normalize file:// URIs to match the manifest's
-                    # plain paths
-                    for rdf in _delete_file_readers(spark, ds, dtypes,
-                                                    with_meta=True):
-                        pieces2.append(rdf.select(
-                            *[F.col(wf.name).alias(f"__delk_{i}")
-                              for i, wf in enumerate(wfields)],
-                            mapping[_io.decode_spark_path_col(
-                                F.col("_metadata.file_path"),
-                                paths=list(seq_map))]
-                            .alias("__del_seq")))
-                dd = pieces2[0]
-                for p_ in pieces2[1:]:
-                    dd = dd.unionByName(p_)
-                return dd
 
+def _eq_delete_keys_df(spark, metadata, schema, ids, dels, with_seq: bool):
+    """The delete keys of `dels` as `__delk_<i>` columns, plus each
+    row's delete-file sequence number as `__del_seq` when `with_seq`.
+    Explicit schema read (skips the inference job). Column names are
+    the DELETE FILE's write-time names (field-ID mapped via its write
+    schema): reading a pre-rename file by the current name would
+    silently return all-NULL keys instead of failing loudly."""
+    by_ws: dict = {}
+    for d in dels:
+        by_ws.setdefault(d.file.write_schema_id, []).append(d)
+    pieces = []
+    for wsid, ds in by_ws.items():
+        try:
+            wsch = metadata.schema_by_id(wsid)
+        except KeyError:
+            wsch = schema
+        wfields = [wsch.field_by_id(i) for i in ids]
+        dtypes = type_to_spark(StructT(tuple(wfields)))
+        if with_seq:
+            seq_map = {d.file.file_path: d.sequence_number for d in ds}
+            mapping = F.create_map(*[F.lit(x) for kv in seq_map.items()
+                                     for x in kv])
+        for rdf in _delete_file_readers(spark, ds, dtypes,
+                                        with_meta=with_seq):
+            cols = [F.col(wf.name).alias(f"__delk_{i}")
+                    for i, wf in enumerate(wfields)]
+            if with_seq:
+                # normalize file:// URIs to match the manifest's plain
+                # paths
+                cols.append(mapping[_io.decode_spark_path_col(
+                    F.col("_metadata.file_path"), paths=list(seq_map))]
+                    .alias("__del_seq"))
+            pieces.append(rdf.select(*cols))
+    dd = pieces[0]
+    for p in pieces[1:]:
+        dd = dd.unionByName(p)
+    return dd
+
+
+def _apply_eq_deletes(scan: TableScan, out, b: ReadBranch):
+    spark, metadata, schema = scan.spark, scan.metadata, scan.schema
+    if not b.uniform_eq:
+        # mixed sequence layout: attach data sequence numbers per file
+        # (broadcast map), anti-join per equality-field-set with
+        # per-pair seq scoping
+        seq_rows = [(e.file.file_path, e.sequence_number) for e in b.files]
+        seq_df = spark.createDataFrame(seq_rows, ["__seq_file", "__data_seq"])
+        out = out.join(F.broadcast(seq_df), F.col(FILE_PATH_COL) == F.col("__seq_file"), "left") \
+                 .drop("__seq_file")
+    for g in b.eq_groups:
+        if g.filter is not None:
+            # small single-key delete sets inline as a codegen'd filter —
+            # no join stage, no per-scan delete-file read job, and the
+            # predicate reaches parquet row-group stats. NULL semantics
+            # match the anti-join's eqNullSafe: a NULL row survives
+            # unless some delete row carried a NULL key.
+            out = out.filter(g.filter)
+            continue
+        seq = g.tier == "seq-tagged"
+        if seq:
             # sequence numbers are baked into the frame -> they join the
             # cache key (a cherry-picked replay of the same file could in
             # principle land at a different seq)
-            seq_key = tuple(sorted((d.file.file_path, d.sequence_number)
-                                   for d in dels))
-            dd = _delete_build_cached(spark, dels, ("eq-seq", ids, seq_key),
-                                      _build_seq_tagged)
-            dd = _eq_build_bounds_filter(dd, plan, key_cols)
-            cond = F.col("__data_seq") < F.col("__del_seq")
-            for i, k in enumerate(key_cols):
-                cond = cond & out[k].eqNullSafe(F.col(f"__delk_{i}"))
-            out = out.join(dd, cond, "left_anti")
-        if not uniform_eq:
-            out = out.drop("__data_seq")
-
-    if with_lineage:
-        # row lineage (format/spec.md:460): _row_id = file.first_row_id +
-        # position; _last_updated_sequence_number = the file's data sequence
-        # number (rows not yet rewritten carry their file's commit seq).
-        # Broadcast per-file map — file count is plan-sized, never row-sized.
-        lin_rows = [(e.file.file_path, e.file.first_row_id, e.sequence_number)
-                    for e in plan.files]
-        lin_df = spark.createDataFrame(
-            lin_rows, "__lin_file string, __lin_first long, __lin_seq long")
-        out = (out.join(F.broadcast(lin_df),
-                        F.col(FILE_PATH_COL) == F.col("__lin_file"), "left")
-               .withColumn(ROW_ID_COL, F.coalesce(
-                   F.col("__mat_rid"), F.col("__lin_first") + F.col(POS_COL)))
-               .withColumn(LAST_UPDATED_SEQ_COL, F.coalesce(
-                   F.col("__mat_seq"), F.col("__lin_seq")))
-               .drop("__lin_file", "__lin_first", "__lin_seq",
-                     "__mat_rid", "__mat_seq"))
-
-    if not with_metadata_columns and need_meta:
-        out = out.drop(FILE_PATH_COL, POS_COL)
+            ck = ("eq-seq", g.ids, tuple(sorted(
+                (d.file.file_path, d.sequence_number) for d in g.deletes)))
+        else:
+            ck = ("eq-uniform", g.ids)
+        dd = _delete_build_cached(
+            spark, g.deletes, ck,
+            lambda g=g, seq=seq: _eq_delete_keys_df(
+                spark, metadata, schema, g.ids, g.deletes, seq))
+        dd = _eq_build_bounds_filter(dd, b.files, g.key_cols)
+        cond = F.col("__data_seq") < F.col("__del_seq") if seq else None
+        for i, k in enumerate(g.key_cols):
+            c = out[k].eqNullSafe(F.col(f"__delk_{i}"))
+            cond = c if cond is None else (cond & c)
+        if g.tier == "broadcast":
+            dd = F.broadcast(dd)
+        elif g.tier == "shuffle":
+            dd = dd.hint("shuffle_hash")
+        out = out.join(dd, cond, "left_anti")
+    if not b.uniform_eq:
+        out = out.drop("__data_seq")
     return out

@@ -84,10 +84,6 @@ class MapT:
     value_required: bool = False
 
 
-def is_primitive(t: Any) -> bool:
-    return isinstance(t, str)
-
-
 def type_to_spark(t: Any) -> T.DataType:
     if isinstance(t, StructT):
         return T.StructType(
@@ -349,18 +345,6 @@ class Schema:
 
     def __str__(self) -> str:
         return json.dumps(self.to_json(), indent=2)
-
-
-def assign_fresh_ids(schema: Schema, schema_id: int = 0) -> Schema:
-    """Reassign sequential field ids (used at table creation)."""
-    return Schema.from_spark(schema.to_spark(), schema_id=schema_id)
-
-
-def prune_columns(schema: Schema, names) -> Schema:
-    """Column pruning by name at the top level (nested pruning is delegated
-    to Spark's own ReadSchema pushdown). Reference: api/.../types/PruneColumns.java."""
-    keep = [schema.find_field(n) for n in names]
-    return replace(schema, fields=tuple(keep))
 
 
 # ---------------------------------------------------------------------------

@@ -225,10 +225,3 @@ def transcode_shredded_files(spark, src_paths, dest_dir: str, ddl: str,
                                    drop_cols)
                     for p in src_paths}
             return {p: f.result() for p, f in futs.items()}
-
-
-def transcode_shredded_file(spark, src_path: str, dest_dir: str,
-                            ddl: str, drop_cols=()) -> str:
-    """Single-file wrapper over transcode_shredded_files."""
-    return transcode_shredded_files(
-        spark, [src_path], dest_dir, ddl, drop_cols)[src_path]

@@ -142,7 +142,7 @@ def test_dv_reader_accepts_run_containers():
     assert np.array_equal(got, want.astype(np.int64))
 
 
-def test_dv_large_delete_distributed_tier(catalog, spark):
+def test_dv_large_delete_distributed_tier(catalog, spark, monkeypatch):
     """A DV big enough to skip the driver tier still applies correctly via
     the executor-expanded anti-join path."""
     from pyspark.sql import functions as F
@@ -158,11 +158,11 @@ def test_dv_large_delete_distributed_tier(catalog, spark):
     rewrite_position_delete_files(t, to_dvs=True)
     t = catalog.load_table("dv.big")
     # force the join tier by shrinking the driver threshold to zero
-    spark.conf.set("spark.iceberg_spark.mor.posDeleteDriverBytes", "0")
-    try:
+    from iceberg_spark import scan as S
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "POS_DELETE_DRIVER_BYTES", 0)
         n = t.to_df().count()
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.posDeleteDriverBytes")
     assert n == 20000 - 6666
 
 

@@ -215,7 +215,7 @@ def test_eq_literal_filter_fast_path(catalog, spark):
     assert t.to_df().count() == 8
 
 
-def test_eq_literal_filter_falls_back_when_big(catalog, spark):
+def test_eq_literal_filter_falls_back_when_big(catalog, spark, monkeypatch):
     """Above the driver-bytes cap the distributed anti-join applies —
     same result either way (the cap only picks the strategy)."""
     from pyspark.sql import types as T
@@ -233,18 +233,19 @@ def test_eq_literal_filter_falls_back_when_big(catalog, spark):
         ["id"])
     RowDelta(t, [], dels).commit()
     t = t.refresh()
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteDriverBytes", "1")
-    # the probe path has its own byte cap — lower it too, otherwise a
-    # small-but-over-isin-bytes set legitimately probes instead
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteProbeBytes", "1")
-    try:
+    from iceberg_spark import scan as S
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "EQ_DELETE_DRIVER_BYTES", 1)
+        # the probe path has its own byte cap — lower it too, otherwise a
+        # small-but-over-isin-bytes set legitimately probes instead
+        m.setattr(S, "EQ_DELETE_PROBE_BYTES", 1)
+        S._EQ_LITERAL_FILTER_CACHE.clear()
         df = t.to_df()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Join" in plan  # anti-join path
         assert df.count() == 40
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteDriverBytes")
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteProbeBytes")
+    S._EQ_LITERAL_FILTER_CACHE.clear()
     assert t.to_df().count() == 40  # literal path agrees
 
 
@@ -364,7 +365,7 @@ def test_eq_probe_disabled_falls_back_to_join(catalog, spark,
     assert t.to_df().count() == 5000 - 2100  # probe path agrees
 
 
-def test_eq_split_scan_clear_files_skip_join(catalog, spark):
+def test_eq_split_scan_clear_files_skip_join(catalog, spark, monkeypatch):
     """DeleteFileIndex analog: data files whose key bounds no delete
     file overlaps read on a plain union branch — correct rows, and the
     executed plan is a Union with the delete filter on one side only."""
@@ -375,9 +376,12 @@ def test_eq_split_scan_clear_files_skip_join(catalog, spark):
         [Row(id=i, v=float(i)) for i in range(100, 110)]))  # 2nd file
     # force the join path (not literal) so the split is observable:
     # delete keys live only in the second file's range
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteLiteralKeys", "0")
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteProbeKeys", "0")
-    try:
+    from iceberg_spark import scan as S
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "EQ_DELETE_MAX_LITERAL_KEYS", 0)
+        m.setattr(S, "EQ_DELETE_MAX_PROBE_KEYS", 0)
+        S._EQ_LITERAL_FILTER_CACHE.clear()
         t.upsert(spark.createDataFrame(
             [Row(id=105, v=-1.0), Row(id=107, v=-2.0)]), keys=["id"])
         df = t.to_df()
@@ -387,9 +391,7 @@ def test_eq_split_scan_clear_files_skip_join(catalog, spark):
         assert len(rows) == 20
         assert rows[105] == -1.0 and rows[107] == -2.0
         assert rows[3] == 3.0
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteLiteralKeys")
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteProbeKeys")
+    S._EQ_LITERAL_FILTER_CACHE.clear()
 
 
 def test_eq_split_null_keys_stay_dirty(catalog, spark):
@@ -478,7 +480,7 @@ def test_delete_build_cache_reuse(catalog, spark, monkeypatch):
         == list(added)
 
 
-def test_eq_probe_filter_date_keys(catalog, spark):
+def test_eq_probe_filter_date_keys(catalog, spark, monkeypatch):
     """Date keys probe on epoch days (DATEDIFF cast) — caps lowered so
     a small fixture exercises the large-set path."""
     import datetime as dt
@@ -502,25 +504,23 @@ def test_eq_probe_filter_date_keys(catalog, spark):
         t, spark.createDataFrame([(d,) for d in days[::2]], ["d"]), ["d"])
     RowDelta(t, [], dels).commit()
     t = t.refresh()
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteLiteralKeys", "8")
-    S._EQ_LITERAL_FILTER_CACHE.clear()
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(S, "EQ_DELETE_MAX_LITERAL_KEYS", 8)
+        S._EQ_LITERAL_FILTER_CACHE.clear()
         df = t.to_df()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan and "static_invoke" in plan
         got = sorted(r.d for r in df.collect())
         assert got == days[1::2]
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteLiteralKeys")
-        S._EQ_LITERAL_FILTER_CACHE.clear()
+    S._EQ_LITERAL_FILTER_CACHE.clear()
 
 
-def test_eq_crossover_mid_size_sets_use_probe(catalog, spark):
+def test_eq_crossover_mid_size_sets_use_probe(catalog, spark, monkeypatch):
     """r13: the literal->probe crossover default dropped 4096 -> 256.
     A 300-key delete set (above the new cap, below the old) must apply
     through the compiled SortedSetProbe StaticInvoke — not a 300-literal
     INSET tree and not a join — with results identical to the literal
-    tier forced via conf."""
+    tier forced through its cap constant."""
     from pyspark.sql import types as T
 
     from iceberg_spark.row_ops import write_equality_deletes
@@ -543,27 +543,25 @@ def test_eq_crossover_mid_size_sets_use_probe(catalog, spark):
     assert "Join" not in plan, plan
     got = sorted(r.id for r in t.to_df().collect())
 
-    # literal tier forced by conf must agree exactly
+    # literal tier forced by its cap constant must agree exactly
     from iceberg_spark import scan as _scan
 
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteLiteralKeys", "4096")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(_scan, "EQ_DELETE_MAX_LITERAL_KEYS", 4096)
         _scan._EQ_LITERAL_FILTER_CACHE.clear()
         lit_plan = t.to_df()._jdf.queryExecution().executedPlan().toString()
         assert "INSET" in lit_plan, lit_plan
         assert sorted(r.id for r in t.to_df().collect()) == got
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteLiteralKeys")
-        _scan._EQ_LITERAL_FILTER_CACHE.clear()
+    _scan._EQ_LITERAL_FILTER_CACHE.clear()
     expected = sorted(set(range(1000)) - {i * 3 for i in range(300)})
     assert got == expected
 
 
-def test_eq_range_run_tier_contiguous_keys(catalog, spark):
+def test_eq_range_run_tier_contiguous_keys(catalog, spark, monkeypatch):
     """r14: a delete-key set that compresses to few adjacency runs
     applies as a parquet-PUSHABLE range-complement predicate — no join,
     no compiled probe — with results identical to the probe tier forced
-    via conf. The pushable filter is the point: on key-clustered
+    by its constant. The pushable filter is the point: on key-clustered
     layouts parquet skips row groups wholly inside a deleted run."""
     from iceberg_spark import scan as S
     from iceberg_spark.row_ops import write_equality_deletes
@@ -596,13 +594,11 @@ def test_eq_range_run_tier_contiguous_keys(catalog, spark):
     assert got == expected
 
     # probe tier forced (range tier off) must agree exactly
-    spark.conf.set("spark.iceberg_spark.mor.eqDeleteRangeRuns", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(S, "EQ_DELETE_MAX_RANGE_RUNS", 0)
         S._EQ_LITERAL_FILTER_CACHE.clear()
         assert sorted(r.id for r in t.to_df().collect()) == got
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.eqDeleteRangeRuns")
-        S._EQ_LITERAL_FILTER_CACHE.clear()
+    S._EQ_LITERAL_FILTER_CACHE.clear()
 
 
 def test_eq_range_run_tier_null_semantics(catalog, spark):

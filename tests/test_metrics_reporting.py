@@ -42,6 +42,10 @@ def test_engine_scan_reports_into_sink(catalog, spark):
     assert r.skipped_data_files == plan.report.skipped_data_files
     assert r.total_data_manifests == plan.report.total_manifests
     assert r.planning_mode == plan.report.planning_mode
+    # the planning time plan_files measured, over at least one manifest
+    assert r.total_data_manifests >= 1
+    dur = json.loads(r.report_json)["metrics"]["total-planning-duration"]
+    assert dur["unit"] == "ms" and dur["value"] > 0
     # filter is SANITIZED (ExpressionUtil.toSanitizedString): the
     # literal is replaced by its magnitude/type description
     assert "grp" in r.filter and "digit" in r.filter

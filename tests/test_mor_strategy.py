@@ -7,10 +7,11 @@ executor. All three must return identical rows."""
 import pytest
 from pyspark.sql import functions as F
 
+from iceberg_spark import scan as S
 from iceberg_spark.expressions import col
 
-DRIVER_KEY = "spark.iceberg_spark.mor.posDeleteDriverBytes"
-BCAST_KEY = "spark.iceberg_spark.mor.posDeleteBroadcastBytes"
+DRIVER = "POS_DELETE_DRIVER_BYTES"
+BCAST = "POS_DELETE_BROADCAST_BYTES"
 
 
 @pytest.fixture()
@@ -27,58 +28,41 @@ def mor_table(catalog, spark):
     return t
 
 
-def _clear(spark):
-    for k in (DRIVER_KEY, BCAST_KEY):
-        try:
-            spark.conf.unset(k)
-        except Exception:
-            pass
-
-
 def _plan_str(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_literal_range_path_no_join(mor_table, spark):
-    _clear(spark)
     df = mor_table.to_df()
     assert df.count() == 900
     plan = _plan_str(df)
     assert "Join" not in plan, f"tiny delete set must not join:\n{plan}"
 
 
-def test_broadcast_path(mor_table, spark):
-    spark.conf.set(DRIVER_KEY, "0")  # force past the driver-read tier
-    try:
-        df = mor_table.to_df()
-        plan = _plan_str(df)
-        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-        assert df.count() == 900
-    finally:
-        _clear(spark)
+def test_broadcast_path(mor_table, monkeypatch):
+    monkeypatch.setattr(S, DRIVER, 0)  # force past the driver-read tier
+    df = mor_table.to_df()
+    plan = _plan_str(df)
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert df.count() == 900
 
 
-def test_shuffled_path_above_threshold(mor_table, spark):
-    spark.conf.set(DRIVER_KEY, "0")
-    spark.conf.set(BCAST_KEY, "0")  # delete set "too big" to broadcast
-    try:
-        df = mor_table.to_df()
-        plan = _plan_str(df)
-        assert "BroadcastHashJoin" not in plan, plan
-        assert ("ShuffledHashJoin" in plan) or ("SortMergeJoin" in plan), plan
-        assert df.count() == 900
-    finally:
-        _clear(spark)
+def test_shuffled_path_above_threshold(mor_table, monkeypatch):
+    monkeypatch.setattr(S, DRIVER, 0)
+    monkeypatch.setattr(S, BCAST, 0)  # delete set "too big" to broadcast
+    df = mor_table.to_df()
+    plan = _plan_str(df)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert ("ShuffledHashJoin" in plan) or ("SortMergeJoin" in plan), plan
+    assert df.count() == 900
 
 
-def test_all_tiers_agree(mor_table, spark):
-    _clear(spark)
+def test_all_tiers_agree(mor_table, monkeypatch):
     expected = sorted(r.id for r in mor_table.to_df().collect())
-    spark.conf.set(DRIVER_KEY, "0")
+    monkeypatch.setattr(S, DRIVER, 0)
     bcast = sorted(r.id for r in mor_table.to_df().collect())
-    spark.conf.set(BCAST_KEY, "0")
+    monkeypatch.setattr(S, BCAST, 0)
     shuffled = sorted(r.id for r in mor_table.to_df().collect())
-    _clear(spark)
     assert expected == bcast == shuffled
     assert len(expected) == 900
 
@@ -185,7 +169,7 @@ def test_unrelated_delete_pruning_survives_manifest_roundtrip(spark,
     assert t.to_df().count() == 9_950
 
 
-def test_pos_split_scan_clear_files_skip_join(catalog, spark):
+def test_pos_split_scan_clear_files_skip_join(catalog, spark, monkeypatch):
     """When the inline-ranges path is unavailable (driver cap forced to
     0), data files no pos delete references read on a plain union
     branch; only referenced files pay the anti-join. Rows stay exact."""
@@ -204,16 +188,14 @@ def test_pos_split_scan_clear_files_skip_join(catalog, spark):
     t.delete_where((col("id") >= 104) & (col("id") <= 106),
                    mode="merge-on-read")
     t = t.refresh()
-    spark.conf.set("spark.iceberg_spark.mor.posDeleteDriverBytes", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(S, DRIVER, 0)
         df = t.to_df()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Union" in plan and "Join" in plan
         got = sorted(r.id for r in df.collect())
         assert got == list(range(10)) + [100, 101, 102, 103, 107, 108,
                                          109]
-    finally:
-        spark.conf.unset("spark.iceberg_spark.mor.posDeleteDriverBytes")
     assert t.to_df().count() == 17  # inline path agrees
 
 
