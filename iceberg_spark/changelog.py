@@ -404,22 +404,16 @@ def changelog_df(table, from_snapshot_id: Optional[int] = None,
                 for d in eq_new:
                     by_ids.setdefault(tuple(sorted(d.file.equality_ids)), []).append(d)
                 for ids, dels_ in by_ids.items():
-                    kfields = [schema.field_by_id(i) for i in ids]
-                    key_cols = [f.name for f in kfields]
-                    from .schema import StructT, type_to_spark
-                    from .scan import _delete_file_readers
+                    from .scan import _eq_delete_keys_df
 
-                    dtypes = type_to_spark(StructT(tuple(kfields)))
-                    parts_ = [
-                        rdf.select(*[F.col(k).alias(f"__k{i}")
-                                     for i, k in enumerate(key_cols)])
-                        for rdf in _delete_file_readers(spark, dels_, dtypes)]
-                    dd = parts_[0]
-                    for p_ in parts_[1:]:
-                        dd = dd.unionByName(p_)
+                    # keys read by field id under each delete file's
+                    # write schema, so a later rename still matches
+                    dd = _eq_delete_keys_df(spark, m, schema, ids, dels_,
+                                            with_seq=False)
                     cond = F.lit(True)
-                    for i, k in enumerate(key_cols):
-                        cond = cond & base[k].eqNullSafe(F.col(f"__k{i}"))
+                    for i, fid in enumerate(ids):
+                        cond = cond & base[schema.field_by_id(fid).name] \
+                            .eqNullSafe(F.col(f"__delk_{i}"))
                     hit = base.join(dd, cond, "left_semi").select(*cols)
                     pieces.append(_tag(hit, cols, DELETE, ordinal, snap.snapshot_id))
 

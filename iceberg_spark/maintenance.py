@@ -1101,8 +1101,7 @@ def remove_dangling_deletes(table) -> int:
     RemoveDanglingDeletesSparkAction.java), while `plan_files()` supplies
     only the live data-file side."""
     from .manifests import DELETED as _DELETED, EQUALITY_DELETES
-    from .relations import files_df
-    from .scan import _data_rel
+    from .scan import _data_rel, pos_delete_rows_df
 
     scan = table.scan()
     plan = scan.plan_files()
@@ -1130,6 +1129,7 @@ def remove_dangling_deletes(table) -> int:
     puffin_total: dict = {}
     puffin_dead: dict = {}
     dangling = set()
+    unscoped = []  # path-ranged files: only their rows name their targets
     for d in pos_deletes:
         st = d.file.stats.get("file_path")
         refs = None
@@ -1152,43 +1152,21 @@ def remove_dangling_deletes(table) -> int:
             if not (refs & live_paths):
                 dangling.add(d.file.file_path)
         else:
-            if d.file.key_metadata:
-                from .parquet_crypto import (file_crypto, read_encrypted,
-                                             resolve_key)
-
-                fc = file_crypto(d.file.key_metadata)
-                if fc[0] == "raw":
-                    # imported reference-native encryption: raw footer
-                    # DEK opens only through the JVM factory
-                    from . import jvm_crypto
-
-                    if not jvm_crypto.available(table.spark):
-                        raise NotImplementedError(
-                            "natively-encrypted position-delete file "
-                            f"{d.file.file_path} requires the JVM "
-                            "crypto path (unavailable in this session)")
-                    pk = {d.file.file_path: fc[1:]}
-                    paths = {_data_rel(r.file_path) for r in
-                             table.spark.read
-                             .options(**jvm_crypto.raw_reader_options(pk))
-                             .schema("file_path string")
-                             .parquet(d.file.file_path)
-                             .select("file_path").distinct().collect()}
-                else:
-                    tbl = read_encrypted(
-                        d.file.file_path, resolve_key(fc[1]),
-                        columns=["file_path"])
-                    paths = {_data_rel(p) for p in
-                             tbl["file_path"].to_pylist()}
-            else:
-                paths = {_data_rel(r.file_path) for r in
-                         files_df(table.spark, "parquet",
-                                  "file_path string", [d.file.file_path],
-                                  {d.file.file_path:
-                                   d.file.file_size_in_bytes})
-                         .distinct().collect()}
-            if not (paths & live_paths):
-                dangling.add(d.file.file_path)
+            unscoped.append(d)
+    if unscoped:
+        # one read over every unscoped file: the data files each one
+        # names, keyed by the delete file's path without its scheme
+        # (`_metadata` reports `file:` URIs as plain paths)
+        refs_of: dict = {}
+        for r in (pos_delete_rows_df(table.spark, unscoped, with_source=True)
+                  .select("file_path", "delete_file_path").distinct()
+                  .collect()):
+            refs_of.setdefault(r["delete_file_path"], set()).add(
+                _data_rel(r["file_path"]))
+        for d in unscoped:
+            p = d.file.file_path
+            if not (refs_of.get(_io.strip_scheme(p), set()) & live_paths):
+                dangling.add(p)
     for p, total in puffin_total.items():
         if puffin_dead.get(p, 0) == total:
             dangling.add(p)

@@ -405,7 +405,8 @@ class TableScan:
                 rj["metadata"]["engine-relation-cache-misses"] = \
                     str(_RELATION_CACHE_STATS["misses"])
                 rj["metadata"]["engine-relation-build"] = \
-                    _relation_build(data_entries, pos_del + eq_del)
+                    _relation_build(self.spark, data_entries,
+                                    pos_del + eq_del)
                 SINK.report(ident, "scan-report", rj)
         except Exception:
             pass
@@ -1309,17 +1310,9 @@ def _eq_delete_literal_keys(metadata, schema, fid: int, dels, byte_cap,
         except KeyError:
             wsch = schema
         name = wsch.field_by_id(fid).name
-        if d.file.key_metadata:
-            from .parquet_crypto import (file_crypto, read_encrypted,
-                                         resolve_key)
-
-            fc = file_crypto(d.file.key_metadata)
-            if fc[0] == "raw":
-                return None  # pyarrow cannot open raw-footer-key parquet
-            tbl = read_encrypted(d.file.file_path, resolve_key(fc[1]),
-                                 columns=[name])
-        else:
-            tbl = _io.read_parquet(d.file.file_path, columns=[name])
+        tbl = _rel.read_columns(d.file, [name])
+        if tbl is None:
+            return None
         for v in tbl.column(name).to_pylist():
             if v is None:
                 saw_null = True
@@ -1340,20 +1333,21 @@ def _pos_delete_bytes(dels) -> int:
         for d in dels)
 
 
-def _relation_build(data_entries, delete_entries) -> str:
+def _relation_build(spark, data_entries, delete_entries) -> str:
     """How plan_to_df builds the plan's file relations: "manifest-fed"
-    when every data and delete file it may read as a relation is a plain
-    file relations.files_df can describe, "spark.read" when none is,
-    "mixed" otherwise. Deletion vectors are not relation reads;
-    encrypted files always read through spark.read."""
+    when relations.manifest_fed holds for every data and delete file it
+    may read as a relation (plaintext, or encrypted and decrypted by the
+    JVM), "spark.read" when it holds for none (the pyarrow decoder
+    counts here too), "mixed" otherwise. Deletion vectors are not
+    relation reads."""
     fed = set()
     for e in list(data_entries) + list(delete_entries):
         f = e.file
         if _is_dv(f):
             continue
         fmt = f.file_format if f.content == DATA else "parquet"
-        fed.add(f.key_metadata is None
-                and _rel.manifest_fed(fmt, f.file_size_in_bytes))
+        fed.add(_rel.manifest_fed(fmt, f.file_size_in_bytes,
+                                  f.key_metadata, spark))
     if False not in fed:
         return _rel.MANIFEST_FED
     return _rel.SPARK_READ if True not in fed else "mixed"
@@ -1373,28 +1367,10 @@ def pos_delete_rows_df(spark, deletes, with_source: bool = False):
     delete file (PositionDeletesTable parity)."""
     import pandas as _pd
 
-    from .parquet_crypto import file_crypto, resolve_key, \
-        unwrap_stream_key
+    from .parquet_crypto import unwrap_stream_key
 
-    pq_paths = sorted({d.file.file_path for d in deletes
-                       if not _is_dv(d.file) and not d.file.key_metadata})
-    # encrypted pos-delete parquet: master keys resolve DRIVER-side
-    # (registry/env) and ship unwrapped inside the task closure — the
-    # same key-plumbing shape as the encrypted data-file reader. Raw-DEK
-    # files (imported reference-native encryption) collect separately:
-    # JVM factory only.
-    enc_pq: dict = {}
-    enc_by_kid: dict = {}
-    raw_pq: list = []
-    for d in deletes:
-        if not _is_dv(d.file) and d.file.key_metadata:
-            fc = file_crypto(d.file.key_metadata)
-            if fc[0] == "raw":
-                raw_pq.append(d.file)
-                continue
-            kid = fc[1]
-            enc_pq[d.file.file_path] = resolve_key(kid)
-            enc_by_kid.setdefault(kid, set()).add(d.file.file_path)
+    pq_files = sorted((d.file for d in deletes if not _is_dv(d.file)),
+                      key=lambda f: f.file_path)
     # encrypted DV Puffin containers: ags1-kms key_metadata -> (key, aad)
     dv_keys = {d.file.file_path: unwrap_stream_key(d.file.key_metadata)
                for d in deletes if _is_dv(d.file) and d.file.key_metadata}
@@ -1403,82 +1379,21 @@ def pos_delete_rows_df(spark, deletes, with_source: bool = False):
                 d.file.referenced_data_file)
                for d in deletes if _is_dv(d.file)]
     dfs = []
-    if pq_paths:
-        # explicit schema and recorded sizes: no inference, no listing
-        pdf = _rel.files_df(
-            spark, "parquet", "file_path string, pos long", pq_paths,
-            {d.file.file_path: d.file.file_size_in_bytes for d in deletes})
-        cols = [F.col("file_path"), F.col("pos")]
-        if with_source:
-            cols.append(_io.decode_spark_path_col(
-                F.col("_metadata.file_path"),
-                paths=pq_paths).alias("delete_file_path"))
-        dfs.append(pdf.select(*cols))
-    if enc_pq:
-        from . import jvm_crypto
+    if pq_files:
+        pq_paths = [f.file_path for f in pq_files]
 
-        if jvm_crypto.available(spark):
-            for kid, kpaths in enc_by_kid.items():
-                kp = sorted(kpaths)
-                pdf = (spark.read
-                       .options(**jvm_crypto.reader_options(
-                           kid, resolve_key(kid)))
-                       .schema("file_path string, pos long")
-                       .parquet(*kp))
-                cols = [F.col("file_path"), F.col("pos")]
-                if with_source:
-                    cols.append(_io.decode_spark_path_col(
-                        F.col("_metadata.file_path"),
-                        paths=kp).alias("delete_file_path"))
-                dfs.append(pdf.select(*cols))
-            enc_pq = {}
-    if raw_pq:
-        from . import jvm_crypto
-
-        if not jvm_crypto.available(spark):
-            raise NotImplementedError(
-                "natively-encrypted position-delete files (raw footer "
-                "DEK) require the JVM crypto path; unavailable in this "
-                "session and pyarrow cannot open raw-footer-key parquet")
-        for batch in _unique_name_batches(raw_pq):
-            pk = {f.file_path: file_crypto(f.key_metadata)[1:]
-                  for f in batch}
-            kp = sorted(pk)
-            pdf = (spark.read
-                   .options(**jvm_crypto.raw_reader_options(pk))
-                   .schema("file_path string, pos long").parquet(*kp))
+        def select(df):
             cols = [F.col("file_path"), F.col("pos")]
             if with_source:
                 cols.append(_io.decode_spark_path_col(
                     F.col("_metadata.file_path"),
-                    paths=kp).alias("delete_file_path"))
-            dfs.append(pdf.select(*cols))
-    if enc_pq:
-        enc_schema = "file_path string, pos long"
-        if with_source:
-            enc_schema += ", delete_file_path string"
+                    paths=pq_paths).alias("delete_file_path"))
+            return df.select(*cols)
 
-        def dec_read(batches):
-            from . import parquet_crypto as _PC
-            for b in batches:
-                for p in b["p"]:
-                    t = _PC.read_encrypted(
-                        p, enc_pq[p],
-                        columns=["file_path", "pos"]).to_pandas()
-                    if with_source:
-                        t["delete_file_path"] = p
-                    yield t
-
-        edf = spark.createDataFrame(
-            [(p,) for p in sorted(enc_pq)], "p string")
-        if len(enc_pq) > 1:
-            # one decode task per file, capped by cluster width (not a
-            # local-mode constant: 32 slots here, executor count x cores
-            # on a cluster)
-            edf = edf.repartition(min(
-                len(enc_pq),
-                max(32, spark.sparkContext.defaultParallelism)))
-        dfs.append(edf.mapInPandas(dec_read, enc_schema))
+        # explicit schema and recorded sizes: no inference, no listing
+        dfs.append(_rel.parquet_df(spark, pq_files,
+                                   "file_path string, pos long", select,
+                                   with_meta=with_source))
     if dv_rows:
         out_schema = "file_path string, pos long"
         if with_source:
@@ -1498,7 +1413,7 @@ def pos_delete_rows_df(spark, deletes, with_source: bool = False):
         ddf = spark.createDataFrame(
             dv_rows, "p string, o long, l long, ref string")
         if len(dv_rows) > 1:
-            # per-DV expand tasks, capped by cluster width as above
+            # one expand task per DV, at most max(32, cluster cores)
             ddf = ddf.repartition(min(
                 len(dv_rows),
                 max(32, spark.sparkContext.defaultParallelism)))
@@ -1562,22 +1477,9 @@ def _entry_runs(d):
                 decrypt=unwrap_stream_key(d.file.key_metadata)),
             runs)
     else:
-        if d.file.key_metadata:
-            from .parquet_crypto import (file_crypto, read_encrypted,
-                                         resolve_key)
-
-            fc = file_crypto(d.file.key_metadata)
-            if fc[0] == "raw":
-                # raw-footer-key parquet has no driver-side (pyarrow)
-                # read; bail to the distributed JVM apply path
-                runs = None
-                ok = False
-            else:
-                t = read_encrypted(d.file.file_path, resolve_key(fc[1]),
-                                   columns=["file_path", "pos"])
-        else:
-            t = _io.read_parquet(d.file.file_path,
-                                 columns=["file_path", "pos"])
+        # None for raw-DEK files: the distributed JVM read applies them
+        t = _rel.read_columns(d.file, ["file_path", "pos"])
+        ok = t is not None
         if ok:
             fp_dict = t.column("file_path").combine_chunks() \
                 .dictionary_encode()
@@ -1590,8 +1492,7 @@ def _entry_runs(d):
                     break
     return _bounded_put(
         _POS_RUNS_CACHE, _POS_RUNS_CACHE_CAP, ck,
-        ({rel: tuple(rs) for rel, rs in runs.items()}
-         if ok and runs is not None else None))
+        ({rel: tuple(rs) for rel, rs in runs.items()} if ok else None))
 
 
 def _pos_delete_ranges(files, dels):
@@ -1829,175 +1730,6 @@ def _arrow_pushdown_filter(residual, schema, wschema):
     for p in parts[1:]:
         out = out & p
     return out
-
-
-def _encrypted_parquet_df(spark, paths: list, read_schema, master_key: bytes,
-                          with_meta: bool, arrow_filter=None):
-    """Engine-encrypted parquet files -> DataFrame: one task per file,
-    each decrypting through pyarrow modular encryption (parquet_crypto)
-    and streaming Arrow batches out — the imported-Avro decode shape, so
-    the read parallelizes exactly like a native format reader at any
-    file count. Column pruning pushes into the decrypting reader
-    (iter_batches(columns=...)); requested columns the file lacks
-    (e.g. lineage) surface as nulls.
-
-    `with_meta=True` additionally emits a `_metadata` struct
-    (file_path in Spark's "file:<plain>" URI spelling, running
-    row_index) so the MoR position-delete machinery downstream applies
-    unchanged."""
-    import pandas as _pd
-
-    from pyspark.sql import types as _T
-
-    cols = [f.name for f in read_schema.fields]
-    out_schema = read_schema
-    if with_meta:
-        out_schema = _T.StructType(list(read_schema.fields) + [
-            _T.StructField("_metadata", _T.StructType([
-                _T.StructField("file_path", _T.StringType()),
-                _T.StructField("row_index", _T.LongType())]))])
-
-    def decode(batches):
-        from urllib.parse import quote
-
-        from . import io as _eio
-        from .parquet_crypto import open_encrypted
-
-        def read_batches(p):
-            """Arrow batches of the requested columns. Local files
-            without metadata needs scan through a pyarrow DATASET with
-            the decryption config — pushing `arrow_filter` down skips
-            whole row groups on their (decrypted) stats before any
-            pandas conversion. Positional reads and remote paths use the
-            plain decrypting reader (filtering would break row_index)."""
-            pf = open_encrypted(p, master_key)
-            have = [c for c in cols if c in pf.schema_arrow.names]
-            if (not with_meta and arrow_filter is not None
-                    and _eio.resolve_io(p) is _eio._LOCAL):
-                import pyarrow.dataset as ds
-                import pyarrow.parquet.encryption as pe
-
-                from .parquet_crypto import _factory
-
-                factory, kc = _factory(master_key)
-                fmt = ds.ParquetFileFormat(
-                    default_fragment_scan_options=ds.ParquetFragmentScanOptions(
-                        decryption_config=ds.ParquetDecryptionConfig(
-                            factory, kc, pe.DecryptionConfiguration())))
-                sc_ = ds.dataset([_eio.strip_scheme(p)],
-                                 format=fmt).scanner(
-                    columns=have, filter=arrow_filter)
-                return have, sc_.to_batches()
-            return have, pf.iter_batches(columns=have)
-
-        for b in batches:
-            for p in b["p"]:
-                have, rbs = read_batches(p)
-                # percent-encoded URI, the same spelling Spark's native
-                # reader reports — every consumer decodes uniformly
-                enc = quote(p, safe="/:")
-                uri = "file:" + enc if p.startswith("/") else enc
-                idx = 0
-                for rb in rbs:
-                    out = rb.to_pandas()
-                    for c in cols:
-                        if c not in out.columns:
-                            out[c] = None
-                    out = out[cols]
-                    if with_meta:
-                        n = len(out)
-                        out["_metadata"] = [
-                            {"file_path": uri, "row_index": i}
-                            for i in range(idx, idx + n)]
-                        idx += n
-                    yield out
-
-    pdf = spark.createDataFrame([(p,) for p in sorted(paths)], "p string")
-    return (pdf.repartition(max(1, len(paths)))
-            .mapInPandas(decode, out_schema))
-
-
-def _unique_name_batches(files, max_batch: int = 4096):
-    """Split DataFiles into batches whose BASENAMES are unique — the JVM
-    raw-DEK factory resolves per-file keys by file name (the only
-    identity parquet-mr hands it that survives scheme/URI respelling).
-    Iceberg data file names are UUID-based so collisions are rare; a
-    collision costs one extra read job, never a wrong key. `max_batch`
-    caps per-relation key-option count: every file adds a Hadoop conf
-    entry to its relation, and an unbounded group would push a
-    million-entry conf through the driver on a big imported table."""
-    batches: list = []
-    for f in files:
-        name = f.file_path.rstrip("/").rsplit("/", 1)[-1]
-        for b in batches:
-            if name not in b[0] and len(b[1]) < max_batch:
-                b[0].add(name)
-                b[1].append(f)
-                break
-        else:
-            batches.append(({name}, [f]))
-    return [b[1] for b in batches]
-
-
-def _delete_file_readers(spark, ds, read_schema, with_meta: bool = False):
-    """Yield DataFrames over DELETE files, splitting engine-encrypted
-    files (data_file.key_metadata) from plaintext ones: plaintext files
-    read natively, encrypted files through the decrypting executor-side
-    reader. `with_meta=True` guarantees a `_metadata` struct on every
-    yielded frame (native reads expose it implicitly; the decrypting
-    reader synthesizes it), so seq-map lookups on `_metadata.file_path`
-    work uniformly."""
-    plain, enc, raw = {}, {}, []
-    for d in ds:
-        if d.file.key_metadata is None:
-            plain[d.file.file_path] = d.file.file_size_in_bytes
-        else:
-            from .parquet_crypto import file_crypto
-
-            fc = file_crypto(d.file.key_metadata)
-            if fc[0] == "raw":
-                raw.append(d.file)
-            else:
-                enc.setdefault(fc[1], []).append(d.file.file_path)
-    if plain:
-        yield _rel.files_df(spark, "parquet", read_schema, plain, plain)
-    if raw:
-        # imported reference-native encrypted delete files: raw footer
-        # DEK per file — JVM factory only, loud refusal without it
-        from . import jvm_crypto
-        from .parquet_crypto import file_crypto
-
-        if not jvm_crypto.available(spark):
-            raise NotImplementedError(
-                "natively-encrypted delete files (raw footer DEK) "
-                "require the JVM crypto path; unavailable in this "
-                "session and pyarrow cannot open raw-footer-key parquet")
-        for batch in _unique_name_batches(raw):
-            pk = {f.file_path: file_crypto(f.key_metadata)[1:]
-                  for f in batch}
-            df = (spark.read
-                  .options(**jvm_crypto.raw_reader_options(pk))
-                  .schema(read_schema).parquet(*sorted(pk)))
-            if with_meta:
-                df = df.withColumn("_metadata", F.col("_metadata"))
-            yield df
-    for kid, paths in enc.items():
-        from . import jvm_crypto
-        from .parquet_crypto import resolve_key
-
-        mkey = resolve_key(kid)
-        if jvm_crypto.available(spark):
-            df = (spark.read.options(**jvm_crypto.reader_options(kid, mkey))
-                  .schema(read_schema).parquet(*paths))
-            if with_meta:
-                # consumers select _metadata.file_path; materialize the
-                # hidden struct under the fallback reader's shape so the
-                # frame survives unions with synthesized ones
-                df = df.withColumn("_metadata", F.col("_metadata"))
-            yield df
-        else:
-            yield _encrypted_parquet_df(spark, paths, read_schema,
-                                        mkey, with_meta)
 
 
 # Tiers whose per-row cost is near-zero (a few comparisons / one InSet
@@ -2346,30 +2078,19 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
         return (native, comps if (_want_comps and comps is not None)
                 else ())
 
-    # Fifth key: encryption key id (data_file.key_metadata) — encrypted
-    # files read through the decrypting executor-side reader, plaintext
-    # files through the native one; one table can hold both (files
-    # written before `encryption.key-id` was set stay plaintext).
-    def _enc_kid(e):
-        if e.file.key_metadata is None:
-            return None
-        from .parquet_crypto import file_crypto
-
-        fc = file_crypto(e.file.key_metadata)
-        # kms groups read under one master key; raw-DEK files (imported
-        # reference-native encryption) group together — their per-FILE
-        # keys ride the read options, not the group key
-        return ("raw",) if fc[0] == "raw" else fc
-
+    # Fifth key: encrypted or not (data_file.key_metadata). Encrypted
+    # files open through relations.parquet_df, which splits them by key;
+    # one table can hold both (files written before `encryption.key-id`
+    # was set stay plaintext).
     groups: dict = {}
     for e in b.files:
         groups.setdefault(
             (e.file.write_schema_id, e.file.file_format, _ident_fills(e),
-             _var_sig(e), _enc_kid(e)),
+             _var_sig(e), e.file.key_metadata is not None),
             []).append(e)
 
     parts = []
-    for (wsid, ffmt, ident_fills, _vsig, enc_kid), entries in groups.items():
+    for (wsid, ffmt, ident_fills, _vsig, encrypted), entries in groups.items():
         fills = dict(ident_fills)
         try:
             wschema = metadata.schema_by_id(wsid)
@@ -2456,68 +2177,113 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
                         list(read_schema.fields)
                         + [_T.StructField(sn, _tts(c.term.stats_type),
                                           True)])
-        if enc_kid is not None:
-            # encrypted files. Engine parquet-kms groups: Spark's NATIVE
-            # vectorized reader through parquet-mr modular encryption
-            # (jvm_crypto) — the identical FileScan a plaintext table
-            # gets (whole-stage codegen, real _metadata, Catalyst
-            # pushdown) — with the decrypting mapInPandas pyarrow reader
-            # as fallback. Raw-DEK groups (imported reference-native
-            # encryption, StandardKeyMetadata): JVM RawDekCryptoFactory
-            # ONLY — pyarrow has no raw-footer-key surface, so absence
-            # of a JDK is a loud refusal, never a garble. Either way the
-            # inline pos-delete filter and the need_meta projection
-            # below apply unchanged.
-            from . import jvm_crypto
 
-            want_meta = need_meta or bool(inline_runs)
-            if enc_kid[0] == "raw":
-                if not jvm_crypto.available(spark):
-                    raise NotImplementedError(
-                        "natively-encrypted data files (raw footer DEK, "
-                        "reference StandardKeyMetadata) require the JVM "
-                        "crypto path; it is unavailable in this session "
-                        "(no JDK / jar not attached) and pyarrow cannot "
-                        "open raw-footer-key parquet")
-                from .parquet_crypto import file_crypto
+        def finish(df):
+            """The group's read, projected to the branch's columns."""
+            if shred_pre:
+                from .schema import NestedField as _NF
 
-                pieces_enc = []
-                for batch in _unique_name_batches(
-                        [e.file for e in entries]):
-                    pk = {f.file_path: file_crypto(f.key_metadata)[1:]
-                          for f in batch}
-                    pieces_enc.append(
-                        spark.read
-                        .options(**jvm_crypto.raw_reader_options(pk))
-                        .schema(read_schema).parquet(*sorted(pk)))
-                df = pieces_enc[0]
-                for d2 in pieces_enc[1:]:
-                    df = df.unionByName(d2)
-            else:
-                from .parquet_crypto import resolve_key
-
-                kid = enc_kid[1]
-                mkey = resolve_key(kid)
-                if jvm_crypto.available(spark):
-                    # native FileScan: the hidden `_metadata` struct
-                    # resolves directly wherever downstream references
-                    # it, exactly as on a plaintext group
-                    df = (spark.read
-                          .options(**jvm_crypto.reader_options(kid, mkey))
-                          .schema(read_schema).parquet(*paths))
+                pred_col = None
+                for c in shred_pre:
+                    bp = E.BoundPredicate(
+                        c.op,
+                        E.BoundTerm(_NF(0, c.term.stats_name,
+                                        c.term.stats_type, False), None),
+                        c.literals)
+                    cc = E.to_spark(bp)
+                    pred_col = cc if pred_col is None else (pred_col & cc)
+                df = df.filter(pred_col).drop(
+                    *dict.fromkeys(c.term.stats_name for c in shred_pre))
+            # map file columns -> current names by field id; fill missing
+            # with null
+            by_id = {f.field_id: f for f in wschema.fields}
+            # fast path: no evolution/rename/promotion/variant in play and no
+            # metadata/lineage columns requested -> project by plain column
+            # names (one py4j call) instead of building per-column expression
+            # trees (~40 py4j round-trips per scan on a 16-column table; the
+            # dominant cost of driver-side DataFrame construction per profile)
+            if not need_meta and not with_lineage and not fills:
+                simple = True
+                for cname in read_cols:
+                    cur = schema.find_field(cname)
+                    wf = by_id.get(cur.field_id)
+                    if (wf is None or wf.name != cname or wf.type != cur.type
+                            or cur.type == "variant"):
+                        simple = False
+                        break
+                if simple:
+                    if read_cols != [f.name for f in wschema.fields]:
+                        df = df.select(*read_cols)
+                    return df
+            sel = []
+            for cname in read_cols:
+                cur = schema.find_field(cname)
+                wf = by_id.get(cur.field_id)
+                if cname in fills:
+                    # identity-partition constant: the physical file
+                    # doesn't store this column (hive-layout import) — its
+                    # value is the file's partition tuple entry by spec
+                    # invariant
+                    sel.append(F.lit(fills[cname])
+                               .cast(type_to_spark(cur.type)).alias(cname))
+                    continue
+                if wf is not None:
+                    c = F.col(wf.name)
+                    if cur.type == "variant":
+                        if wf.name not in native_vars:
+                            c = F.parse_json(c)  # JSON text -> VariantType
+                    elif wf.type != cur.type:  # promoted (int->long etc.)
+                        if wf.type == "date" and cur.type == "timestamp_ns":
+                            # timestamp_ns is stored as long nanos (schema.py);
+                            # a date is whole days -> days * 86400e9 nanos
+                            c = (F.unix_date(c).cast("long")
+                                 * F.lit(86_400_000_000_000).cast("long"))
+                        else:
+                            c = c.cast(type_to_spark(cur.type))
+                    sel.append(c.alias(cname))
                 else:
-                    push = (None if want_meta else
-                            _arrow_pushdown_filter(residual, schema,
-                                                   wschema))
-                    df = _encrypted_parquet_df(spark, paths, read_schema,
-                                               mkey, want_meta,
-                                               arrow_filter=push)
-            if inline_runs:
-                df = df.filter(~_pos_deleted_cond(spark, inline_runs,
-                                                  raw_meta=True)[0])
-                if not need_meta:
-                    df = df.drop("_metadata")
-        elif inline_runs:
+                    # v3 initial-default: pre-evolution files read the default
+                    fill = (F.lit(cur.initial_default)
+                            if cur.initial_default is not None
+                            else F.lit(None))
+                    sel.append(fill.cast(type_to_spark(cur.type)).alias(cname))
+            if need_meta:
+                # decode + normalize the URI column to plain-path form so it
+                # matches manifest file_path values (percent-escapes AND the
+                # file: scheme); the group's path list licenses the cheap
+                # scheme-strip when nothing needs escaping
+                sel = sel + [
+                    _io.decode_spark_path_col(F.col("_metadata.file_path"),
+                                              paths=paths)
+                    .alias(FILE_PATH_COL),
+                ]
+                if need_pos:
+                    sel.append(F.col("_metadata.row_index").alias(POS_COL)
+                               if group_parquet
+                               else F.lit(None).cast("long").alias(POS_COL))
+            if with_lineage:
+                if group_parquet:
+                    sel.append(F.col(ROW_ID_COL).alias("__mat_rid"))
+                    sel.append(F.col(LAST_UPDATED_SEQ_COL).alias("__mat_seq"))
+                else:
+                    sel.append(F.lit(None).cast("long").alias("__mat_rid"))
+                    sel.append(F.lit(None).cast("long").alias("__mat_seq"))
+            return df.select(*sel)
+
+        if encrypted:
+            # the opener picks the reader by key; the inline runs test
+            # the raw `_metadata` struct inside each key group's read
+            want_meta = need_meta or bool(inline_runs)
+            keep = (~_pos_deleted_cond(spark, inline_runs, raw_meta=True)[0]
+                    if inline_runs else None)
+            parts.append(_rel.parquet_df(
+                spark, [e.file for e in entries], read_schema,
+                lambda df: finish(df if keep is None else df.filter(keep)),
+                arrow_filter=None if want_meta else _arrow_pushdown_filter(
+                    residual, schema, wschema),
+                with_meta=want_meta))
+            continue
+        if inline_runs:
             # apply position-delete runs on the raw metadata struct (URI
             # form, e.g. file:/x) before projection — no join, no extra
             # job, no per-row normalized-path materialization.
@@ -2565,93 +2331,7 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
             df = _avro_decode_df(spark, paths, read_schema)
         else:
             df = _cached_file_df(spark, ffmt, read_schema, paths, sizes)
-        if shred_pre:
-            from .schema import NestedField as _NF
-
-            pred_col = None
-            for c in shred_pre:
-                bp = E.BoundPredicate(
-                    c.op,
-                    E.BoundTerm(_NF(0, c.term.stats_name,
-                                    c.term.stats_type, False), None),
-                    c.literals)
-                cc = E.to_spark(bp)
-                pred_col = cc if pred_col is None else (pred_col & cc)
-            df = df.filter(pred_col).drop(
-                *dict.fromkeys(c.term.stats_name for c in shred_pre))
-        # map file columns -> current names by field id; fill missing with null
-        by_id = {f.field_id: f for f in wschema.fields}
-        # fast path: no evolution/rename/promotion/variant in play and no
-        # metadata/lineage columns requested -> project by plain column
-        # names (one py4j call) instead of building per-column expression
-        # trees (~40 py4j round-trips per scan on a 16-column table; the
-        # dominant cost of driver-side DataFrame construction per profile)
-        if not need_meta and not with_lineage and not fills:
-            simple = True
-            for cname in read_cols:
-                cur = schema.find_field(cname)
-                wf = by_id.get(cur.field_id)
-                if (wf is None or wf.name != cname or wf.type != cur.type
-                        or cur.type == "variant"):
-                    simple = False
-                    break
-            if simple:
-                if read_cols != [f.name for f in wschema.fields]:
-                    df = df.select(*read_cols)
-                parts.append(df)
-                continue
-        sel = []
-        for cname in read_cols:
-            cur = schema.find_field(cname)
-            wf = by_id.get(cur.field_id)
-            if cname in fills:
-                # identity-partition constant: the physical file doesn't
-                # store this column (hive-layout import) — its value is the
-                # file's partition tuple entry by spec invariant
-                sel.append(F.lit(fills[cname])
-                           .cast(type_to_spark(cur.type)).alias(cname))
-                continue
-            if wf is not None:
-                c = F.col(wf.name)
-                if cur.type == "variant":
-                    if wf.name not in native_vars:
-                        c = F.parse_json(c)  # JSON text -> VariantType
-                elif wf.type != cur.type:  # promoted (int->long etc.)
-                    if wf.type == "date" and cur.type == "timestamp_ns":
-                        # timestamp_ns is stored as long nanos (schema.py);
-                        # a date is whole days -> days * 86400e9 nanos
-                        c = (F.unix_date(c).cast("long")
-                             * F.lit(86_400_000_000_000).cast("long"))
-                    else:
-                        c = c.cast(type_to_spark(cur.type))
-                sel.append(c.alias(cname))
-            else:
-                # v3 initial-default: pre-evolution files read the default
-                fill = (F.lit(cur.initial_default)
-                        if cur.initial_default is not None else F.lit(None))
-                sel.append(fill.cast(type_to_spark(cur.type)).alias(cname))
-        if need_meta:
-            # decode + normalize the URI column to plain-path form so it
-            # matches manifest file_path values (percent-escapes AND the
-            # file: scheme); the group's path list licenses the cheap
-            # scheme-strip when nothing needs escaping
-            sel = sel + [
-                _io.decode_spark_path_col(F.col("_metadata.file_path"),
-                                          paths=paths)
-                .alias(FILE_PATH_COL),
-            ]
-            if need_pos:
-                sel.append(F.col("_metadata.row_index").alias(POS_COL)
-                           if group_parquet
-                           else F.lit(None).cast("long").alias(POS_COL))
-        if with_lineage:
-            if group_parquet:
-                sel.append(F.col(ROW_ID_COL).alias("__mat_rid"))
-                sel.append(F.col(LAST_UPDATED_SEQ_COL).alias("__mat_seq"))
-            else:
-                sel.append(F.lit(None).cast("long").alias("__mat_rid"))
-                sel.append(F.lit(None).cast("long").alias("__mat_seq"))
-        parts.append(df.select(*sel))
+        parts.append(finish(df))
     out = parts[0]
     for d in parts[1:]:
         out = out.unionByName(d)
@@ -2703,22 +2383,20 @@ def _eq_delete_keys_df(spark, metadata, schema, ids, dels, with_seq: bool):
         except KeyError:
             wsch = schema
         wfields = [wsch.field_by_id(i) for i in ids]
-        dtypes = type_to_spark(StructT(tuple(wfields)))
+        cols = [F.col(wf.name).alias(f"__delk_{i}")
+                for i, wf in enumerate(wfields)]
         if with_seq:
             seq_map = {d.file.file_path: d.sequence_number for d in ds}
             mapping = F.create_map(*[F.lit(x) for kv in seq_map.items()
                                      for x in kv])
-        for rdf in _delete_file_readers(spark, ds, dtypes,
-                                        with_meta=with_seq):
-            cols = [F.col(wf.name).alias(f"__delk_{i}")
-                    for i, wf in enumerate(wfields)]
-            if with_seq:
-                # normalize file:// URIs to match the manifest's plain
-                # paths
-                cols.append(mapping[_io.decode_spark_path_col(
-                    F.col("_metadata.file_path"), paths=list(seq_map))]
-                    .alias("__del_seq"))
-            pieces.append(rdf.select(*cols))
+            # normalize file:// URIs to match the manifest's plain paths
+            cols.append(mapping[_io.decode_spark_path_col(
+                F.col("_metadata.file_path"), paths=list(seq_map))]
+                .alias("__del_seq"))
+        pieces.append(_rel.parquet_df(
+            spark, [d.file for d in ds],
+            type_to_spark(StructT(tuple(wfields))),
+            lambda df, cols=cols: df.select(*cols), with_meta=with_seq))
     dd = pieces[0]
     for p in pieces[1:]:
         dd = dd.unionByName(p)

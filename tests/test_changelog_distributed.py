@@ -93,3 +93,26 @@ def test_changelog_distributed_over_encrypted_manifests(spark, tmp_path):
     assert manifests.READ_MANIFEST_CALLS == before
     assert local == dist
     assert len(dist) == 13 + 2  # 13 inserts, 2 deletes
+
+
+def test_changelog_eq_deletes_after_rename(catalog, spark):
+    """An upsert's equality-delete keys are read by field id under the
+    delete file's write schema: after `id` is renamed the changelog
+    still pairs them with the rows they deleted, in both modes."""
+    schema = T.StructType([
+        T.StructField("id", T.LongType()), T.StructField("v", T.StringType())
+    ])
+    t = catalog.create_table("db.cdc_rename", schema)
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(5)], schema))
+    t.refresh().upsert(
+        spark.createDataFrame([(1, "new1"), (3, "new3")], schema),
+        keys=["id"])
+    t = t.refresh()
+    t.update_schema().rename_column("id", "key").commit()
+    t = t.refresh()
+    for mode in ("local", "distributed"):
+        rows = t.changes(mode=mode).collect()
+        deleted = sorted((r["key"], r["v"]) for r in rows
+                         if r["_change_type"] == "DELETE")
+        assert deleted == [(1, "v1"), (3, "v3")], mode
+        assert sum(r["_change_type"] == "INSERT" for r in rows) == 7, mode

@@ -229,7 +229,12 @@ def test_scan_report_names_relation_build(spark, tmp_path):
         R.MANIFEST_FED
 
 
-def test_scan_report_names_spark_read_when_encrypted(spark, tmp_path):
+def test_scan_report_names_spark_read_when_encrypted(spark, tmp_path,
+                                                    monkeypatch):
+    """Encrypted files are manifest-fed when the JVM decrypts them and
+    read by the pyarrow decoder (reported as spark.read) when it does
+    not."""
+    from iceberg_spark import jvm_crypto
     from iceberg_spark import parquet_crypto as PC
 
     PC.register_key("relations-key", bytes(range(16)))
@@ -241,6 +246,51 @@ def test_scan_report_names_spark_read_when_encrypted(spark, tmp_path):
         t = t.refresh()
         assert t.to_df().count() == 10
         assert _latest_report(t)["metadata"]["engine-relation-build"] == \
+            (R.MANIFEST_FED if jvm_crypto.available(spark) else R.SPARK_READ)
+        monkeypatch.setenv("ICEBERG_SPARK_JVM_CRYPTO", "0")
+        assert t.to_df().count() == 10
+        assert _latest_report(t)["metadata"]["engine-relation-build"] == \
             R.SPARK_READ
     finally:
         PC.unregister_key("relations-key")
+
+
+def test_encrypted_table_under_glob_location(spark, tmp_path):
+    """A KMS-encrypted table of 40 files (above Spark's 32-path listing
+    threshold) under `wh[x]`: append, merge-on-read DELETE and upsert
+    read back through the opener (the JVM crypto path read through
+    `spark.read` and failed with PATH_NOT_FOUND)."""
+    from iceberg_spark import jvm_crypto
+    from iceberg_spark import parquet_crypto as PC
+
+    PC.register_key("globby-key", bytes(range(16)))
+    try:
+        cat = Catalog(spark, str(tmp_path / "wh[x]"))
+        t = cat.create_table("db.enc_globby", _rows(spark, 0, 1).schema,
+                             properties={**MOR,
+                                         PC.KEY_ID_PROP: "globby-key"})
+        t.append(_rows(spark, 0, 400).repartition(40))
+        t = t.refresh()
+        files = t.scan().plan_files().files
+        assert len(files) == 40
+        assert all(e.file.key_metadata for e in files)
+        assert t.to_df().count() == 400
+        if jvm_crypto.available(spark):
+            assert _latest_report(t)["metadata"][
+                "engine-relation-build"] == R.MANIFEST_FED
+        t.delete_where(col("id") < 30, mode="merge-on-read")
+        t = t.refresh()
+        assert all(d.file.key_metadata
+                   for d in t.scan().plan_files().pos_deletes)
+        assert t.to_df().count() == 370
+        t.upsert(spark.createDataFrame([Row(id=50, grp=0, v=-1.0)],
+                                       t.to_df().schema), keys=["id"])
+        t = t.refresh()
+        assert t.scan().plan_files().eq_deletes
+        df = t.to_df()
+        assert df.count() == 370
+        assert df.agg(F.min("id")).collect()[0][0] == 30
+        assert df.filter(F.col("id") == 50).select("v").collect()[0][0] \
+            == -1.0
+    finally:
+        PC.unregister_key("globby-key")
