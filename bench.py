@@ -27,6 +27,8 @@ from iceberg_spark import workloads
 from iceberg_spark.sources.testdata import load_table, session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# where a run writes its full payload (gitignored)
+FULL_OUT = "bench_full.out.json"
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -39,13 +41,16 @@ BENCH_QUERIES = [
 ]
 
 
-def synthetic_planning_table(spark, n_partitions=32, files_per_partition=320):
+def synthetic_planning_table(spark, n_partitions=32, files_per_partition=320,
+                             name="planning"):
     """10k-file metadata tree with no data IO (PlanningBenchmark analog:
     spark/v4.0/spark-extensions/src/jmh/.../PlanningBenchmark.java:92 uses
     30 partitions x 50k files; scaled to 10k total per BASELINE.md #4).
 
-    One FastAppend per partition -> per-partition manifests; entries carry
-    fabricated id-range stats so min/max file pruning has real work to do.
+    One FastAppend per partition -> one manifest per partition (manifest
+    merging off, so any partition count keeps its manifests); entries
+    carry fabricated id-range stats so min/max file pruning has real work
+    to do.
     """
     import tempfile
 
@@ -61,7 +66,8 @@ def synthetic_planning_table(spark, n_partitions=32, files_per_partition=320):
         T.StructField("id", T.LongType()),
         T.StructField("payload", T.StringType()),
     ])
-    t = cat.create_table("bench.planning", schema, partition_by=["p"])
+    t = cat.create_table(f"bench.{name}", schema, partition_by=["p"],
+                         properties={"commit.manifest-merge.enabled": "false"})
     rows_per_file = 1000
     for p in range(n_partitions):
         files = []
@@ -80,7 +86,7 @@ def synthetic_planning_table(spark, n_partitions=32, files_per_partition=320):
 
 def planning_benchmarks(spark, register):
     from iceberg_spark.expressions import col
-    from iceberg_spark.manifests import _MANIFEST_CACHE
+    from iceberg_spark.manifests import _ARROW_CACHE, _MANIFEST_CACHE
 
     t = synthetic_planning_table(spark)
 
@@ -118,7 +124,7 @@ def planning_benchmarks(spark, register):
         # r14 (verdict item 6): steady-state REPLANNING — same distributed
         # plan as plan_distributed_full but WITHOUT clearing the manifest
         # cache, so the session-scoped memos (_MANIFEST_CACHE,
-        # _ENTRIES_PLAN_CACHE, _RELATION_CACHE) serve as they would for a
+        # _ENTRIES_PLAN_CACHE) serve as they would for a
         # real session replanning the same table. Regressions in those
         # cache tiers were previously invisible: every planning entry
         # measured the deliberately-cold path. Additive — the cold
@@ -128,6 +134,22 @@ def planning_benchmarks(spark, register):
 
     assert plan_dist_warm() == 32 * 320
     register("plan_distributed_warm_10k_files", plan_dist_warm)
+
+    # AUTO planning, cold, over 128 small manifests (80 files each): their
+    # bytes stay under scan.DISTRIBUTED_PLANNING_BYTES, so AUTO must plan
+    # locally, not as a Spark job (the count-based rule planned this
+    # table distributed: 128 > 64 manifests)
+    t128 = synthetic_planning_table(spark, 128, 80, name="planning_auto")
+
+    def plan_auto():
+        _MANIFEST_CACHE.clear()
+        _ARROW_CACHE.clear()
+        plan = t128.scan().plan_files()
+        assert plan.report.planning_mode == "local", plan.report
+        return len(plan.files)
+
+    assert plan_auto() == 128 * 80
+    register("plan_auto_128_manifests", plan_auto)
 
     # maintenance planning at metadata scale: full-reachability closure over
     # 32 snapshots x 10k files as a Spark job (ExpireSnapshotsSparkAction /
@@ -141,6 +163,43 @@ def planning_benchmarks(spark, register):
         return res
 
     register("maintenance_plan_10k", maint_plan)
+
+
+def planning_sweep(spark, sizes=(32, 128, 512), files_per_manifest=80,
+                   runs=5):
+    """Cold local against cold distributed planning of the full synthetic
+    table at each manifest count: the data behind
+    scan.DISTRIBUTED_PLANNING_BYTES. Every run starts with the manifest
+    caches cleared; one dict per size (medians of `runs`)."""
+    import shutil
+    import statistics
+
+    from iceberg_spark.manifests import (_ARROW_CACHE, _MANIFEST_CACHE,
+                                         read_manifest_list)
+
+    out = []
+    for n in sizes:
+        t = synthetic_planning_table(spark, n, files_per_manifest,
+                                     name=f"sweep_{n}")
+        ms = read_manifest_list(t.current_snapshot().manifest_list)
+        row = {"manifests": len(ms), "files": n * files_per_manifest,
+               "manifest_bytes": sum(m.length for m in ms)}
+        for mode in ("local", "distributed"):
+            ts = []
+            for _ in range(runs + 1):  # the first run warms the JVM
+                _MANIFEST_CACHE.clear()
+                _ARROW_CACHE.clear()
+                t0 = time.perf_counter()
+                plan = t.scan(planning_mode=mode).plan_files()
+                ts.append(time.perf_counter() - t0)
+                assert len(plan.files) == row["files"]
+            row[f"{mode}_s"] = round(statistics.median(ts[1:]), 4)
+        out.append(row)
+        wh = t.location
+        while not os.path.basename(wh).startswith("iceberg_spark_plan_bench_"):
+            wh = os.path.dirname(wh)
+        shutil.rmtree(wh, ignore_errors=True)
+    return out
 
 
 def eq_delete_benchmarks(spark, register, sf_dir):
@@ -966,9 +1025,11 @@ def main():
     # front. queries_normalized is derivable (seconds / machine_factor),
     # so it stays file-only; stdout rounds to 3dp and must stay well
     # under ~2000 chars (asserted) so the LAST line always survives.
+    # The file is gitignored: a run never touches the tracked
+    # BENCH_FULL.json, the committed record a round copies it to.
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
+        with open(os.path.join(here, FULL_OUT), "w") as f:
             json.dump(full, f, indent=1)
     except OSError:
         pass
@@ -983,13 +1044,13 @@ def main():
         "pass_unstable_entries": sorted(unstable)[:12],
         "sf": sf,
         **env_info,
-        "full": "BENCH_FULL.json",
+        "full": FULL_OUT,
     }
     line = json.dumps(compact, separators=(",", ":"))
     # the driver truncates long stdout lines; shed low-value keys (never
     # crash a successful run, and never rely on `assert` — stripped
     # under -O) until the line fits. The full payload is always in
-    # BENCH_FULL.json.
+    # FULL_OUT.
     for drop in ("cpu_calib_samples", "pass_unstable_entries", "queries"):
         if len(line) < 2600:
             break
@@ -1000,4 +1061,10 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:] == ["--planning-sweep"]:
+        _spark = session("iceberg_spark_plan_sweep")
+        _spark.sparkContext.setLogLevel("ERROR")
+        for _row in planning_sweep(_spark):
+            print(json.dumps(_row), flush=True)
+    else:
+        main()

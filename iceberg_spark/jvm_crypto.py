@@ -61,7 +61,9 @@ def _jar_dirs(h: str) -> list:
 
 
 def _build_jar():
-    """Compile the KmsClient against Spark's own parquet/hadoop jars
+    """Compile the helper sources in java/ (the KmsClient and
+    RawDekCryptoFactory here, jvm_probe's SortedSetProbe, and the
+    relations' FileStatuses) against Spark's own parquet/hadoop jars
     into a content-addressed jar under the per-user cache directory
     (one build per source version per user; the temp dir when the cache
     is not writable). Returns the jar path or None when no JDK is

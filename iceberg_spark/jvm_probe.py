@@ -39,7 +39,9 @@ _session_state: dict = {}  # id(sparkContext) -> bool (jar usable)
 def available(spark) -> bool:
     """True when the session's JVM can resolve the probe class. Builds
     and attaches the shared helper jar on first call (same jar as the
-    crypto helpers — one javac per source version per user)."""
+    crypto helpers — one javac per source version per user), which also
+    carries `org.iceberg_spark.util.FileStatuses`, the one-call
+    leaf-file array of relations.files_df."""
     if os.environ.get("ICEBERG_SPARK_JVM_PROBE", "").lower() in (
             "0", "false", "off"):
         return False

@@ -113,9 +113,9 @@ def _decrypt_core_rows(path: str, key: bytes, aad: bytes,
     return [tuple(c[i] for c in cols) + tail for i in range(n)]
 
 
-# Entry-DataFrame plan memo (the scan.py _RELATION_CACHE analog for the
-# metadata tier): building the multi-manifest reader plan costs ~100 ms of
-# driver py4j work per call, and maintenance planning re-reads the same
+# Entry-DataFrame plan memo (metadata tier): building the multi-manifest
+# reader plan costs ~100 ms of driver py4j work per call, and
+# maintenance planning re-reads the same
 # immutable manifest set many times per session. Manifest files are
 # written once under uuid names, so (paths, location, flag) fully
 # determines the plan. LRU-capped; keyed by application id so plans from

@@ -88,6 +88,8 @@ def scan_report_json(table_name: str, report, snapshot_id: int,
             "result-delete-files": _counter(report.result_delete_files),
         },
         "metadata": {"planning-mode": report.planning_mode,
+                     "engine-planning-uncached-bytes":
+                         str(report.uncached_manifest_bytes),
                      "engine-total-data-files":
                          str(report.total_data_files)},
     }

@@ -28,7 +28,10 @@ path as a glob, so a table under a location holding `[`, `*` or `?`
 could not be read back.
 
 1. One `FileStatus(size, ...)` per file goes into a private
-   `FileStatusCache`, all under one key, with one `putLeafFiles`.
+   `FileStatusCache`, all under one key, with one `putLeafFiles`. One
+   call to the helper jar's `FileStatuses.of` (java/, loaded by
+   jvm_probe) builds the array; without the jar, or for a path holding
+   a newline, three py4j calls per file do.
 2. The index has that key as its only root path and
    `recursiveFileLookup` on. The root is a cache hit, so the index lists
    nothing; it takes every file put there as a leaf, whatever directory
@@ -37,12 +40,12 @@ could not be read back.
 3. `HadoopFsRelation(index, ..., ParquetFileFormat|OrcFileFormat,
    options)` goes through `baseRelationToDataFrame`.
 
-No filesystem call, no Spark job and no compiled helper: three py4j
-calls per file plus about a dozen per relation, however the files
-spread over directories. The JVM schema, format objects and the empty
-options map are made once per context, so a one-file relation costs no
-more than `spark.read` of one file. A file with no recorded size or a
-format other than parquet/orc reads through `spark.read`.
+No filesystem call and no Spark job: about a dozen py4j calls per
+relation, however many files it has and however they spread over
+directories. The JVM schema, format objects and the empty options map
+are made once per context, so a one-file relation costs no more than
+`spark.read` of one file. A file with no recorded size or a format
+other than parquet/orc reads through `spark.read`.
 """
 
 from __future__ import annotations
@@ -175,13 +178,10 @@ def _build(spark, ffmt, read_schema, paths, sizes, options):
         if qp is None:
             return None
         files[qp] = int(sizes[p])
-    P, FS = h["Path"], h["FileStatus"]
-    arr = h["gateway"].new_array(FS, len(files))
-    for i, (qp, size) in enumerate(files.items()):
-        arr[i] = FS(size, False, 1, 128 << 20, 0, P(qp))
+    arr = _statuses(h, spark, files)
     # the one key the index looks up: any path serves; a file's own
     # directory reads best in a plan
-    root = P(qp.rpartition("/")[0])
+    root = h["Path"](next(reversed(files)).rpartition("/")[0])
     cache = h["SharedCache"](_NO_SIZE_LIMIT, -1).createForNewClient()
     cache.putLeafFiles(root, arr)
     jschema, some_schema = _schema(h, spark, read_schema)
@@ -194,6 +194,22 @@ def _build(spark, ffmt, read_schema, paths, sizes, options):
                         h["to_map"](options) if options
                         else h["no_options"], jss)
     return DataFrame(jss.baseRelationToDataFrame(rel), spark)
+
+
+def _statuses(h, spark, files: dict):
+    """The `FileStatus[]` of `files` (qualified path -> size)."""
+    from . import jvm_probe
+
+    joined = "\n".join(files)
+    if joined.count("\n") == len(files) - 1 and jvm_probe.available(spark):
+        if "of" not in h:
+            h["of"] = spark._jvm.org.iceberg_spark.util.FileStatuses.of
+        return h["of"](joined, ",".join(map(str, files.values())))
+    P, FS = h["Path"], h["FileStatus"]
+    arr = h["gateway"].new_array(FS, len(files))
+    for i, (qp, size) in enumerate(files.items()):
+        arr[i] = FS(size, False, 1, 128 << 20, 0, P(qp))
+    return arr
 
 
 def parquet_df(spark, files, read_schema, select, arrow_filter=None,

@@ -51,6 +51,7 @@ from .manifests import (
     DELETED,
     EQUALITY_DELETES,
     POSITION_DELETES,
+    _ARROW_CACHE,
     DataFile,
     ManifestEntry,
     entries_from_arrow,
@@ -60,6 +61,7 @@ from .manifests import (
     read_manifest_list,
 )
 from .metadata import Snapshot, TableMetadata, resolve_path
+from .metrics_reporting import job_description
 from .schema import Schema, StructT, type_to_spark
 from .transforms import Identity
 
@@ -71,7 +73,10 @@ DELETED_COL = "_deleted"
 ROW_ID_COL = "_row_id"
 LAST_UPDATED_SEQ_COL = "_last_updated_sequence_number"
 
-DISTRIBUTED_PLANNING_THRESHOLD = 64  # manifests; above this, plan as a Spark job
+# AUTO planning reads the surviving manifests on the driver while the
+# ones not yet in the manifest cache (manifests._ARROW_CACHE) add up to
+# at most this many recorded bytes, and as a Spark job above it
+DISTRIBUTED_PLANNING_BYTES = 8 << 20
 
 
 def _data_rel(p: str) -> str:
@@ -102,6 +107,9 @@ class ScanReport:
     result_data_files: int = 0
     result_delete_files: int = 0
     planning_mode: str = "local"
+    # recorded bytes of the surviving manifests not yet in the manifest
+    # cache: what AUTO compares with DISTRIBUTED_PLANNING_BYTES
+    uncached_manifest_bytes: int = 0
     total_planning_duration_ms: float = 0.0
     # log-safe filter description (ExpressionUtil.toSanitizedString): literal
     # values replaced by magnitude/type/hash descriptions
@@ -228,14 +236,19 @@ class TableScan:
             else:
                 report.skipped_manifests += 1
 
+        report.uncached_manifest_bytes = sum(
+            m.length for m in keep if m.path not in _ARROW_CACHE)
         mode = self.planning_mode
         if mode == "auto":
-            mode = "distributed" if len(keep) > DISTRIBUTED_PLANNING_THRESHOLD else "local"
+            mode = ("distributed" if report.uncached_manifest_bytes
+                    > DISTRIBUTED_PLANNING_BYTES else "local")
         report.planning_mode = mode
 
         prefiltered = None
         if mode == "distributed":
-            entries = self._read_entries_spark(keep)
+            with job_description(self.spark, "iceberg scan planning: "
+                                 f"{len(keep)} manifests"):
+                entries = self._read_entries_spark(keep)
         else:
             if not isinstance(bound, E.AlwaysTrue):
                 prefiltered = self._read_entries_local_prefiltered(
@@ -400,10 +413,6 @@ class TableScan:
                     ident, report, snap.snapshot_id,
                     self.metadata.current_schema_id,
                     projected_names=self.columns or ())
-                rj["metadata"]["engine-relation-cache-hits"] = \
-                    str(_RELATION_CACHE_STATS["hits"])
-                rj["metadata"]["engine-relation-cache-misses"] = \
-                    str(_RELATION_CACHE_STATS["misses"])
                 rj["metadata"]["engine-relation-build"] = \
                     _relation_build(self.spark, data_entries,
                                     pos_del + eq_del)
@@ -524,15 +533,20 @@ class TableScan:
             read_schema = from_arrow_schema(manifest_arrow_schema(schema, spec))
             df = _rel.files_df(self.spark, "parquet", read_schema, paths,
                                sizes)
-            cond = F.col("status") != F.lit(DELETED)
+            # prune data files only: an unpartitioned equality delete of
+            # a partitioned table fails every partition filter, yet may
+            # delete matching rows; plan_files scopes delete files itself
+            keep_data = F.lit(True)
             if not isinstance(bound, E.AlwaysTrue):
                 proj = E.project(bound, spec, inclusive=True)
                 if not isinstance(proj, E.AlwaysTrue):
-                    cond = cond & _partition_filter_column(proj, df)
+                    keep_data = keep_data & _partition_filter_column(proj, df)
                 stats_cond = _stats_filter_column(bound, schema, df)
                 if stats_cond is not None:
-                    cond = cond & stats_cond
-            surv = df.filter(cond)
+                    keep_data = keep_data & stats_cond
+            surv = df.filter((F.col("status") != F.lit(DELETED))
+                             & ((F.col("content") != F.lit(DATA))
+                                | keep_data))
             try:
                 # Arrow transfer + the vectorized lazy-column entry builder
                 # — ~3x cheaper than row collect + per-row dict rebuild
@@ -974,34 +988,6 @@ def _bounded_put(cache: dict, cap: int, key, value, on_evict=None):
 # py4j costs ~1s, executing the cached codegen'd filter costs ~0.
 _EQ_LITERAL_FILTER_CACHE: dict = {}
 _EQ_LITERAL_FILTER_CACHE_CAP = 256
-
-# Relation cache: a manifest-fed relation (relations.files_df) costs
-# about three py4j calls per file to build — ~0.3 s at 1,050 files —
-# while a hit costs nothing, so re-reads of a snapshot keep their
-# relation. Data files are immutable and uuid-named, so a (schema,
-# format, sorted paths) key can never serve stale bytes; expired files
-# simply stop appearing in new plans' keys. LRU: hits refresh recency,
-# the oldest entry alone evicts at cap — a long-lived session
-# alternating >cap path-sets must not thrash the whole cache the way a
-# wholesale clear() did. Session-cumulative hit/miss counters ride
-# every scan report ("engine-relation-cache-*" metadata).
-_RELATION_CACHE: dict = {}
-_RELATION_CACHE_CAP = 128
-_RELATION_CACHE_STATS = {"hits": 0, "misses": 0}
-
-
-def _cached_file_df(spark, ffmt: str, read_schema, paths, sizes):
-    key = (spark.sparkContext.applicationId, ffmt, str(read_schema),
-           tuple(paths))
-    df = _RELATION_CACHE.get(key)
-    if df is None:
-        _RELATION_CACHE_STATS["misses"] += 1
-        df = _rel.files_df(spark, ffmt, read_schema, paths, sizes)
-    else:
-        _RELATION_CACHE_STATS["hits"] += 1
-    # (re)insert at the most-recent position
-    return _bounded_put(_RELATION_CACHE, _RELATION_CACHE_CAP, key, df)
-
 
 # Delete-content cache (reference SparkExecutorCache: spark/v4.0/.../
 # SparkExecutorCache.java — the reference caches decoded delete-file
@@ -2297,10 +2283,8 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
                 # A clean/hit two-relation union was measured SLOWER at
                 # sf10 (32 files -> 27+26=53 scan partitions = two task
                 # waves on 32 cores: union 552 ms vs single-relation
-                # probe 363 ms ~= raw 368 ms), and the single relation
-                # shares its cache entry with the table's no-delete
-                # scans.
-                df = (_cached_file_df(spark, ffmt, read_schema, paths, sizes)
+                # probe 363 ms ~= raw 368 ms).
+                df = (_rel.files_df(spark, ffmt, read_schema, paths, sizes)
                       .filter(~deleted))
             else:
                 # probe unavailable: per-row expression chains cost per
@@ -2315,10 +2299,10 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
                 pieces = []
                 if clean:
                     pieces.append(
-                        _cached_file_df(spark, ffmt, read_schema, clean, sizes))
+                        _rel.files_df(spark, ffmt, read_schema, clean, sizes))
                 if hit:
                     pieces.append(
-                        _cached_file_df(spark, ffmt, read_schema, hit, sizes)
+                        _rel.files_df(spark, ffmt, read_schema, hit, sizes)
                         .filter(~deleted))
                 df = pieces[0]
                 for p in pieces[1:]:
@@ -2330,7 +2314,7 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
             # read parallelizes exactly like a native format reader
             df = _avro_decode_df(spark, paths, read_schema)
         else:
-            df = _cached_file_df(spark, ffmt, read_schema, paths, sizes)
+            df = _rel.files_df(spark, ffmt, read_schema, paths, sizes)
         parts.append(finish(df))
     out = parts[0]
     for d in parts[1:]:

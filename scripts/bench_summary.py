@@ -4,7 +4,11 @@ can never drift from the numbers they ship with (the r9 VERDICT caught
 COVERAGE.md describing a superseded run).
 
 Usage:
-    python scripts/bench_summary.py [BENCH_FULL.json [PREV_BENCH.json]]
+    python scripts/bench_summary.py [bench_full.out.json [PREV_BENCH.json]]
+
+The default input is the payload of the last `python bench.py` run
+(bench_full.out.json, gitignored); pass BENCH_FULL.json to summarise
+the committed record.
 
 Prints a markdown block: headline totals, gate results (via
 audit_registry_perf.check_bench), the interleaved ratios, and the
@@ -23,7 +27,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def main():
     cur_path = sys.argv[1] if len(sys.argv) > 1 else \
-        os.path.join(ROOT, "BENCH_FULL.json")
+        os.path.join(ROOT, "bench_full.out.json")
     prev_path = sys.argv[2] if len(sys.argv) > 2 else None
     if prev_path is None:
         import glob

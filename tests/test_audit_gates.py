@@ -77,6 +77,7 @@ def test_gated_name_sets_pinned():
         "plan_distributed_full_10k_files",
         "plan_distributed_warm_10k_files",
         "plan_import_decode_10k",
+        "plan_auto_128_manifests",
     }
     # only genuinely multi-core-tracking entries belong here (the warm
     # twin runs the same 32-task distributed planning job as the cold

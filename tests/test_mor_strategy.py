@@ -199,76 +199,3 @@ def test_pos_split_scan_clear_files_skip_join(catalog, spark, monkeypatch):
     assert t.to_df().count() == 17  # inline path agrees
 
 
-def test_relation_cache_reuse_and_keying(catalog, spark):
-    """File-list relations cache per (app, format, schema, paths): the
-    same plan re-served without re-listing, different schemas/path sets
-    kept distinct, results exact across cache hits."""
-    from pyspark.sql import Row
-
-    from iceberg_spark import scan as S
-
-    df = spark.createDataFrame([Row(id=i, v=float(i)) for i in range(6)])
-    t = catalog.create_table("mor.relcache", df.schema)
-    t.append(df)
-    t = t.refresh()
-    paths = tuple(e.file.file_path
-                  for e in t.scan().plan_files().files)
-    before = len(S._RELATION_CACHE)
-    assert t.to_df().count() == 6
-    assert t.to_df().count() == 6  # second scan: cache hit
-    after = {k: v for k, v in S._RELATION_CACHE.items()
-             if k[3] == tuple(sorted(paths)) or set(paths) <= set(k[3])}
-    keys = [k for k in S._RELATION_CACHE
-            if set(paths) & set(k[3])]
-    assert len(keys) == 1  # one relation for this path set
-    assert len(S._RELATION_CACHE) >= before
-    # appending adds a file -> new path set -> new relation, old intact
-    t.append(spark.createDataFrame([Row(id=99, v=9.0)]))
-    t = t.refresh()
-    assert t.to_df().count() == 7
-    keys2 = [k for k in S._RELATION_CACHE if set(paths) & set(k[3])]
-    assert len(keys2) == 2
-
-
-def test_relation_cache_lru_eviction_and_counters(catalog, spark,
-                                                  monkeypatch):
-    """At cap the cache evicts the least-recently-used entry alone (no
-    wholesale clear), hits refresh recency, and session hit/miss
-    counters surface in scan_reports metadata."""
-    from pyspark.sql import Row
-
-    from iceberg_spark import scan as S
-
-    S._RELATION_CACHE.clear()
-    monkeypatch.setattr(S, "_RELATION_CACHE_CAP", 2)
-    sch = spark.createDataFrame([Row(id=1)]).schema
-    tabs = []
-    for i in range(3):
-        t = catalog.create_table(f"mor.lru{i}", sch)
-        t.append(spark.createDataFrame([Row(id=i)]))
-        tabs.append(t.refresh())
-    h0, m0 = (S._RELATION_CACHE_STATS["hits"],
-              S._RELATION_CACHE_STATS["misses"])
-    tabs[0].to_df().count()   # miss -> cache [0]
-    tabs[1].to_df().count()   # miss -> cache [0, 1]
-    tabs[0].to_df().count()   # hit  -> recency [1, 0]
-    k0 = next(iter(S._RELATION_CACHE))
-    tabs[2].to_df().count()   # miss at cap -> evicts LRU (=1), not all
-    assert len(S._RELATION_CACHE) == 2
-    assert k0 not in S._RELATION_CACHE      # table 1's entry evicted
-    assert S._RELATION_CACHE_STATS["hits"] == h0 + 1
-    assert S._RELATION_CACHE_STATS["misses"] == m0 + 3
-    tabs[0].to_df().count()   # survivor still serves: hit, no rebuild
-    assert S._RELATION_CACHE_STATS["hits"] == h0 + 2
-    # counters ride the scan report (cumulative session values as of
-    # each PLAN — the report is emitted at plan time, so scan once more
-    # and the newest report carries the prior scans' totals)
-    tabs[0].to_df().count()
-    rep = (tabs[0].metadata_table("scan_reports")
-           .orderBy(F.col("received_at_ms").desc()).limit(1)
-           .select("report_json").collect()[0][0])
-    import json as _json
-
-    md = _json.loads(rep)["metadata"]
-    assert int(md["engine-relation-cache-hits"]) >= h0 + 2
-    assert int(md["engine-relation-cache-misses"]) >= m0 + 3
