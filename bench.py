@@ -123,9 +123,10 @@ def planning_benchmarks(spark, register):
     def plan_dist_warm(filt=None):
         # r14 (verdict item 6): steady-state REPLANNING — same distributed
         # plan as plan_distributed_full but WITHOUT clearing the manifest
-        # cache, so the session-scoped memos (_MANIFEST_CACHE,
-        # _ENTRIES_PLAN_CACHE) serve as they would for a
-        # real session replanning the same table. Regressions in those
+        # cache, so the session-scoped memos (the manifest-list and JVM
+        # schema caches: distributed planning reads no manifest on the
+        # driver) serve as they would for a real session replanning
+        # the same table. Regressions in those
         # cache tiers were previously invisible: every planning entry
         # measured the deliberately-cold path. Additive — the cold
         # entries above are unchanged.
@@ -933,6 +934,8 @@ def main():
             ("mor_dv_ratio", "delete_mor_dv_scan",
              "orders_scan_no_deletes_baseline"),
             ("eq_mor_ratio", "eq_delete_mor_scan",
+             "orders_scan_no_deletes_baseline"),
+            ("eq_mor_scattered_ratio", "eq_delete_mor_scattered_scan",
              "orders_scan_no_deletes_baseline")):
         _nf, _df = _fns.get(num_name), _fns.get(den_name)
         if not (_nf and _df):

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 
 from . import io as _io
+from .caches import BoundedCache
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -630,59 +631,41 @@ def write_manifest(
     )
 
 
-_MANIFEST_CACHE: dict = {}
-_MANIFEST_CACHE_MAX = 256
-
-# driver-side manifest-read counter (observability + tests asserting that
-# distributed surfaces do NOT fall back to per-snapshot driver loops)
-READ_MANIFEST_CALLS = 0
+# Manifests are immutable, so their decoded forms are memoized: Python
+# entries (~2 KB each) by entry count, Arrow tables (~0.4 KB an entry)
+# by bytes. A table at AUTO's local-planning bound (8 MiB of manifests,
+# ~7,000 entries) fits several times over, so replanning it reads no
+# manifest however many manifests it has.
+_MANIFEST_CACHE = BoundedCache("manifests.entries", 32_768, weight=len)
+_ARROW_CACHE = BoundedCache("manifests.arrow", 16 << 20,
+                            weight=lambda t: t.nbytes)
+_ML_CACHE = BoundedCache("manifests.lists", 256)
 
 
 def read_manifest(path: str, schema: Schema, spec: PartitionSpec,
                   columns: Optional[list] = None,
                   location: Optional[str] = None) -> list:
-    """Read manifest entries back into Python objects (local planning).
-
-    Manifest files are immutable once written, so entries are memoized by
-    (path, schema id) — repeated scans of the same snapshot skip the IO.
-    v4 relative path fields resolve against ``location`` (inferred from the
-    manifest's own path under the fixed table layout when not given).
-    """
-    global READ_MANIFEST_CALLS
-    READ_MANIFEST_CALLS += 1
+    """Read manifest entries back into Python objects (local planning),
+    memoized. v4 relative path fields resolve against ``location``
+    (inferred from the manifest's own path under the fixed table layout
+    when not given)."""
     if location is None:
         location = _infer_location(path)
     ck = (path, schema.schema_id, spec.spec_id, location)
     hit = _MANIFEST_CACHE.get(ck)
     if hit is not None:
         return hit
-    entries = _read_manifest_uncached(path, schema, spec, location)
-    if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
-        _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-    _MANIFEST_CACHE[ck] = entries
-    return entries
-
-
-_ARROW_CACHE: dict = {}
-_ARROW_CACHE_MAX = 256
+    return _MANIFEST_CACHE.put(ck, entries_from_arrow(
+        read_manifest_arrow(path), schema, spec, location))
 
 
 def read_manifest_arrow(path: str) -> pa.Table:
     """Manifest file as a (memoized) Arrow table — the vectorized-planning
-    input. Manifests are immutable, so path alone keys the cache."""
+    input."""
     hit = _ARROW_CACHE.get(path)
     if hit is not None:
         return hit
-    t = _read_metadata_parquet(path)
-    if len(_ARROW_CACHE) >= _ARROW_CACHE_MAX:
-        _ARROW_CACHE.pop(next(iter(_ARROW_CACHE)))
-    _ARROW_CACHE[path] = t
-    return t
-
-
-def _read_manifest_uncached(path: str, schema: Schema, spec: PartitionSpec,
-                            location: Optional[str] = None) -> list:
-    return entries_from_arrow(read_manifest_arrow(path), schema, spec, location)
+    return _ARROW_CACHE.put(path, _read_metadata_parquet(path))
 
 
 def entries_from_arrow(t: pa.Table, schema: Schema, spec: PartitionSpec,
@@ -925,9 +908,6 @@ def write_manifest_list(location: str, snapshot_id: int, manifests: list,
     return path
 
 
-_ML_CACHE: dict = {}
-
-
 def read_manifest_list(path: str, location: Optional[str] = None) -> list:
     if location is None:
         location = _infer_location(path)
@@ -936,11 +916,7 @@ def read_manifest_list(path: str, location: Optional[str] = None) -> list:
     out = _ML_CACHE.get(ck)
     if out is not None:
         return out
-    out = _read_manifest_list_uncached(path, location)
-    if len(_ML_CACHE) >= _MANIFEST_CACHE_MAX:
-        _ML_CACHE.pop(next(iter(_ML_CACHE)))
-    _ML_CACHE[ck] = out
-    return out
+    return _ML_CACHE.put(ck, _read_manifest_list_uncached(path, location))
 
 
 def _read_manifest_list_uncached(path: str, location: Optional[str] = None) -> list:

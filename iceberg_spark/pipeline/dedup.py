@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..caches import BoundedCache, unpersist
 from .common import (
     CORPUS_SQL,
     dedup_corpus,
@@ -38,38 +39,24 @@ from .common import (
 JACCARD_T = 0.6
 SHINGLE_N = 3
 
-# memoized .cache()'d DataFrames keyed (tag, sf_dir): repeated invocations
-# (bench timing loops, re-runs in one session) reuse one cached plan
-# instead of stacking fresh cache blocks until memory pressure evicts them
-_DF_CACHE: dict = {}
+# .cache()'d DataFrames by (app id, tag, sf_dir): re-runs in one session
+# (bench timing loops) reuse one cached plan instead of stacking cache
+# blocks; the app id keeps a stopped session's frames from returning.
+_DF_CACHE = BoundedCache("pipeline.dedup.frames", 16, on_evict=unpersist)
 
 
 def _cached_df(tag, sf_dir, build):
-    # key by application id too: a cached DataFrame from a stopped
-    # SparkSession would raise on any action in a new session
     from pyspark.sql import SparkSession
 
     active = SparkSession.getActiveSession()
-    app_id = (active.sparkContext.applicationId
-              if active is not None else None)
-    if app_id is not None:
-        hit = _DF_CACHE.get((app_id, tag, sf_dir))
-        if hit is not None:
-            return hit  # short-circuit: don't rebuild the plan on a hit
-    df = build()
-    key = (df.sparkSession.sparkContext.applicationId, tag, sf_dir)
-    if key not in _DF_CACHE:
-        # evict entries from other (stopped) sessions so cache blocks and
-        # dict entries don't accumulate for the process lifetime
-        for k in [k for k in _DF_CACHE if k[0] != key[0]]:
-            stale = _DF_CACHE.pop(k, None)
-            try:
-                if stale is not None:
-                    stale.unpersist()
-            except Exception:
-                pass
-        _DF_CACHE[key] = df.cache()
-    return _DF_CACHE[key]
+    hit = active and _DF_CACHE.get(
+        (active.sparkContext.applicationId, tag, sf_dir))
+    if hit is None:  # a hit does not rebuild the plan
+        df = build()
+        key = (df.sparkSession.sparkContext.applicationId, tag, sf_dir)
+        hit = _DF_CACHE[key] if key in _DF_CACHE \
+            else _DF_CACHE.put(key, df.cache())
+    return hit
 MINHASH_K = 128
 LSH_BANDS = 32  # rows per band = MINHASH_K / LSH_BANDS = 4
 HAMMING_MAX = 3

@@ -50,21 +50,21 @@ other than parquet/orc reads through `spark.read`.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
+
+from .caches import BoundedCache
 
 MANIFEST_FED = "manifest-fed"
 SPARK_READ = "spark.read"
 
 _FORMATS = ("parquet", "orc")
-_SCHEMA_CACHE_CAP = 256
 _NO_SIZE_LIMIT = (1 << 63) - 1  # the private FileStatusCache never evicts
 
 # JVM handles made once per SparkContext (a new context, or a restarted
-# JVM, brings handles that replace these wholesale)
+# JVM, brings handles that replace these wholesale, and empties the
+# schema cache, whose JVM schemas belong to the old context)
 _HANDLES: dict = {"context": None}
-_LOCK = threading.Lock()
+_SCHEMAS = BoundedCache("relations.schemas", 256)
 
 
 def manifest_fed(file_format: str, size, key_metadata=None,
@@ -88,6 +88,7 @@ def _handles(spark) -> dict:
     h = _HANDLES
     if h["context"] is not sc._jsc:
         jvm = spark._jvm
+        _SCHEMAS.clear()
         ds = jvm.org.apache.spark.sql.execution.datasources
         uri = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
             sc._jsc.hadoopConfiguration())
@@ -114,28 +115,23 @@ def _handles(spark) -> dict:
             no_partitions=jvm.org.apache.spark.sql.types.StructType(),
             formats={"parquet": ds.parquet.ParquetFileFormat(),
                      "orc": ds.orc.OrcFileFormat()},
-            schemas={},
         )
     return h
 
 
-def _schema(h, spark, read_schema):
+def _schema(spark, read_schema):
     """(nullable data schema, Some(it)), made once per schema. Nullable
     as `spark.read` makes it: a required column a file lacks reads as
     null, which a non-nullable schema would let Catalyst assume away."""
     key = read_schema if isinstance(read_schema, str) \
         else read_schema.json()
-    hit = h["schemas"].get(key)
+    hit = _SCHEMAS.get(key)
     if hit is None:
         jss = spark._jsparkSession
         js = (spark._jvm.org.apache.spark.sql.types.StructType
               .fromDDL(read_schema) if isinstance(read_schema, str)
               else jss.parseDataType(key)).asNullable()
-        hit = (js, spark._jvm.scala.Option.apply(js))
-        with _LOCK:
-            while len(h["schemas"]) >= _SCHEMA_CACHE_CAP:
-                h["schemas"].pop(next(iter(h["schemas"])))
-            h["schemas"][key] = hit
+        hit = _SCHEMAS.put(key, (js, spark._jvm.scala.Option.apply(js)))
     return hit
 
 
@@ -184,7 +180,7 @@ def _build(spark, ffmt, read_schema, paths, sizes, options):
     root = h["Path"](next(reversed(files)).rpartition("/")[0])
     cache = h["SharedCache"](_NO_SIZE_LIMIT, -1).createForNewClient()
     cache.putLeafFiles(root, arr)
-    jschema, some_schema = _schema(h, spark, read_schema)
+    jschema, some_schema = _schema(spark, read_schema)
     index = h["Index"](jss, h["to_seq"]([root]), h["recursive"],
                        some_schema, cache, h["none"], h["none"])
     if index.sizeInBytes() != sum(files.values()):

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from . import expressions as E
 from . import io as _io
 from . import relations as _rel
+from .caches import BoundedCache, unpersist
 from .manifests import (
     DATA,
     DELETED,
@@ -879,8 +880,7 @@ POS_DELETE_BROADCAST_BYTES = 64 * 1024 * 1024
 POS_DELETE_MAX_LITERAL_RANGES = 256
 # path -> (native variant names, companion cols | None=unprobed): footer
 # probes survive across plans (paths are immutable uuid-named files)
-_VAR_SIG_CACHE: dict = {}
-_VAR_SIG_CACHE_CAP = 65_536
+_VAR_SIG_CACHE = BoundedCache("scan.variant_signatures", 65_536)
 
 EQ_DELETE_DRIVER_BYTES = 1024 * 1024
 # beyond a few thousand keys the literal path loses twice: building N
@@ -966,47 +966,18 @@ def _eq_key_runs(keys, ftype: str, cap: int):
     return runs
 
 
-def _bounded_put(cache: dict, cap: int, key, value, on_evict=None):
-    """Store `value` as the newest entry of `cache`, first evicting the
-    oldest entries (dict order) so at most `cap` remain; `on_evict`
-    sees each evicted value. One entry goes at a time: a session that
-    cycles through more than `cap` keys must not lose the whole cache
-    to a wholesale clear()."""
-    cache.pop(key, None)
-    while cache and len(cache) >= cap:
-        old = cache.pop(next(iter(cache)))
-        if on_evict is not None:
-            on_evict(old)
-    cache[key] = value
-    return value
+# (app id, sorted delete-file paths, key column) -> (filter, tier):
+# delete files are immutable, so the filter serves every re-plan of a
+# snapshot (building 1500 Literal objects through py4j costs ~1 s).
+_EQ_LITERAL_FILTER_CACHE = BoundedCache("scan.eq_literal_filters", 256)
 
-
-# (session id, sorted delete-file paths, column name) -> (filter, tier).
-# Delete files are immutable (uuid-named, never rewritten in place), so
-# the literal NOT-IN filter built from them can be reused across every
-# re-plan of the same snapshot — building 1500 Literal objects through
-# py4j costs ~1s, executing the cached codegen'd filter costs ~0.
-_EQ_LITERAL_FILTER_CACHE: dict = {}
-_EQ_LITERAL_FILTER_CACHE_CAP = 256
-
-# Delete-content cache (reference SparkExecutorCache: spark/v4.0/.../
-# SparkExecutorCache.java — the reference caches decoded delete-file
-# content across scan tasks because delete files are immutable and
-# re-read on every scan of the same snapshot). Engine analog: the
-# anti-join BUILD side (the delete-key DataFrame) is persisted
-# MEMORY_AND_DISK and keyed by the delete files' (path, write-schema,
-# seq) identity, so repeated scans of a snapshot pay the delete-file
-# read job once. LRU by insertion order; evicted entries unpersist.
+# Delete-content cache (the reference's SparkExecutorCache keeps decoded
+# delete-file content across scan tasks): the anti-join build side is
+# persisted MEMORY_AND_DISK under the delete files' (path, write-schema,
+# seq) identity, so repeated scans of a snapshot read the deletes once.
 DELETE_CACHE_BYTES = 128 * 1024 * 1024  # reference executor-cache default
-_DELETE_BUILD_CACHE: dict = {}
-_DELETE_BUILD_CACHE_CAP = 64
-
-
-def _unpersist_quietly(df):
-    try:
-        df.unpersist(blocking=False)
-    except Exception:
-        pass
+_DELETE_BUILD_CACHE = BoundedCache("scan.delete_builds", 64,
+                                   on_evict=unpersist)
 
 
 def _delete_build_cached(spark, dels, ck_extra, builder):
@@ -1025,9 +996,8 @@ def _delete_build_cached(spark, dels, ck_extra, builder):
     if dd is None:
         from pyspark import StorageLevel
 
-        dd = _bounded_put(_DELETE_BUILD_CACHE, _DELETE_BUILD_CACHE_CAP, ck,
-                          builder().persist(StorageLevel.MEMORY_AND_DISK),
-                          on_evict=_unpersist_quietly)
+        dd = _DELETE_BUILD_CACHE.put(
+            ck, builder().persist(StorageLevel.MEMORY_AND_DISK))
     return dd
 
 
@@ -1262,8 +1232,7 @@ def _eq_group_inline_cond(spark, metadata, schema, ids, dels):
             cond = jvm_probe.not_in_filter(spark, key_col, keys, ftype,
                                            saw_null)
             tier = "probe" if cond is not None else None
-    return _bounded_put(_EQ_LITERAL_FILTER_CACHE,
-                        _EQ_LITERAL_FILTER_CACHE_CAP, ck, (cond, tier))
+    return _EQ_LITERAL_FILTER_CACHE.put(ck, (cond, tier))
 
 
 def _eq_delete_literal_keys(metadata, schema, fid: int, dels, byte_cap,
@@ -1410,14 +1379,12 @@ def pos_delete_rows_df(spark, deletes, with_source: bool = False):
     return out
 
 
-# (appId-free: pure file content) (path, content_offset) -> per-entry
-# runs {rel_suffix: ((lo, hi), ...)} or None (too many runs / unreadable
-# driver-side). Delete files are immutable, so the decoded+compressed
-# runs never go stale — without this, every plan_to_df of a table with
-# pos deletes re-reads the delete parquet AND re-groups it in Python on
-# the driver (~0.2s at 150k deleted rows, PER QUERY).
-_POS_RUNS_CACHE: dict = {}
-_POS_RUNS_CACHE_CAP = 256
+# (path, content_offset) -> per-entry runs {rel_suffix: ((lo, hi), ...)}
+# or None (too many runs / unreadable on the driver); plain Python values,
+# so no app id in the key. Without it every
+# plan_to_df re-reads and re-groups the delete parquet on the driver
+# (~0.2 s at 150k deleted rows, per query).
+_POS_RUNS_CACHE = BoundedCache("scan.pos_runs", 256)
 
 
 def _entry_runs(d):
@@ -1476,9 +1443,8 @@ def _entry_runs(d):
                 if not compress(_data_rel(fp), poss[idx == i], runs):
                     ok = False
                     break
-    return _bounded_put(
-        _POS_RUNS_CACHE, _POS_RUNS_CACHE_CAP, ck,
-        ({rel: tuple(rs) for rel, rs in runs.items()} if ok else None))
+    return _POS_RUNS_CACHE.put(
+        ck, {rel: tuple(rs) for rel, rs in runs.items()} if ok else None)
 
 
 def _pos_delete_ranges(files, dels):
@@ -1523,17 +1489,14 @@ def _pos_delete_ranges(files, dels):
     return ranges
 
 
-# Compiled position-run probe columns, cached per delete layout: the
-# StaticInvoke build costs a few py4j round trips; the runs it encodes
-# come from immutable delete files, so reuse across re-plans is safe
-# (same invariants as _EQ_LITERAL_FILTER_CACHE). NOTE: a per-file READ
-# fanout (one union branch per deleted-into file, position-only
-# filters) was measured SLOWER at sf10 — 13 single-file branches cost
-# ~0.2s of plan build and lost cross-branch codegen fusion (exec
-# 0.73s vs 0.49s grouped) — so the grouped read + this probe is the
-# shape that scales.
-_POS_COVER_FILTER_CACHE: dict = {}
-_POS_COVER_FILTER_CACHE_CAP = 256
+# Compiled position-run probe columns by delete layout: a build costs a
+# few py4j round trips, and the runs come from immutable delete files.
+# NOTE: a per-file READ fanout (one union branch per deleted-into file,
+# position-only filters) was measured SLOWER at sf10 — 13 single-file
+# branches cost ~0.2s of plan build and lost cross-branch codegen fusion
+# (exec 0.73s vs 0.49s grouped) — so the grouped read + this probe is
+# the shape that scales.
+_POS_COVER_FILTER_CACHE = BoundedCache("scan.pos_cover_filters", 256)
 
 
 def _uri_lit(fp: str) -> str:
@@ -1543,13 +1506,13 @@ def _uri_lit(fp: str) -> str:
 
 
 def _pos_deleted_cond(spark, pos_ranges, raw_meta: bool):
-    """(Column, probed): 'position is deleted' over `pos_ranges`. Runs
-    over two or more files use the cached compiled run-coverage probe
+    """(Column, probed): 'position is deleted' over `pos_ranges`. The
+    runs use the cached compiled run-coverage probe
     (jvm_probe.pos_covered_filter) — one StaticInvoke per row, memoized
     file ordinal + binary search over (ordinal<<40)|pos-encoded runs,
     the per-task BitmapPositionDeleteIndex probe shape (reference
-    core/.../deletes/BitmapPositionDeleteIndex.java:31). One file, or no
-    JVM helper, falls back to the _ranges_filter expression chain.
+    core/.../deletes/BitmapPositionDeleteIndex.java:31). Without the JVM
+    helper they fall back to the _ranges_filter expression chain.
     `raw_meta` tests Spark's raw `_metadata` struct before projection:
     URI-spelled paths compare raw against `file:` literals when no path
     holds a char Spark would percent-escape (zero per-row
@@ -1563,17 +1526,16 @@ def _pos_deleted_cond(spark, pos_ranges, raw_meta: bool):
     else:
         path_expr, pos_expr, invariant = FILE_PATH_COL, POS_COL, True
     path_lit = _uri_lit if raw_meta else (lambda fp: fp)
-    if invariant and len(files) >= 2:
+    if invariant:
         ck = (spark.sparkContext.applicationId, raw_meta, path_expr,
               pos_expr, tuple(pos_ranges))
         probe = _POS_COVER_FILTER_CACHE.get(ck, False)
         if probe is False:
             from . import jvm_probe
 
-            probe = _bounded_put(
-                _POS_COVER_FILTER_CACHE, _POS_COVER_FILTER_CACHE_CAP, ck,
-                jvm_probe.pos_covered_filter(spark, pos_ranges, path_lit,
-                                             path_expr, pos_expr))
+            probe = _POS_COVER_FILTER_CACHE.put(
+                ck, jvm_probe.pos_covered_filter(spark, pos_ranges, path_lit,
+                                                 path_expr, pos_expr))
         if probe is not None:
             return probe, True
     if not invariant:
@@ -1617,7 +1579,7 @@ def _ranges_filter(path_col, pos_col, pos_ranges, path_lit=lambda fp: fp):
     return deleted
 
 
-_SPARK_AVRO: dict = {}
+_SPARK_AVRO = BoundedCache("scan.spark_avro", 16)  # id(context) -> bool
 
 
 def _spark_avro_available(spark) -> bool:
@@ -1631,7 +1593,7 @@ def _spark_avro_available(spark) -> bool:
             hit = True
         except Exception as e:
             hit = "Failed to find data source" not in str(e)
-        _SPARK_AVRO[key] = hit
+        _SPARK_AVRO.put(key, hit)
     return hit
 
 
@@ -2059,7 +2021,7 @@ def _read_files(scan: TableScan, residual, b: ReadBranch,
                     except Exception:
                         comps = ()
                 hit = (tuple(sorted(vnames)), comps)
-            _bounded_put(_VAR_SIG_CACHE, _VAR_SIG_CACHE_CAP, p, hit)
+            _VAR_SIG_CACHE.put(p, hit)
         native, comps = hit
         return (native, comps if (_want_comps and comps is not None)
                 else ())

@@ -48,6 +48,8 @@ import uuid as _uuid
 from dataclasses import replace as _replace
 from urllib.parse import unquote, urlparse
 
+from ..caches import BoundedCache
+
 # spec type name -> engine type name (schema.py: engine "timestamp" is
 # Iceberg timestamptz; engine "timestamp_ntz" is Iceberg timestamp)
 _TYPE_MAP = {"timestamp": "timestamp_ntz", "timestamptz": "timestamp"}
@@ -1435,8 +1437,8 @@ def _avro_partition_raw(v, result_type: str):
     return v
 
 
-_EXPORT_PLAN_CACHE: dict = {}  # (uuid, location, snapshot_id) -> entries
-_EXPORT_PLAN_CACHE_MAX = 4096
+# (uuid, location, snapshot_id) -> (entries, had_dv)
+_EXPORT_PLAN_CACHE = BoundedCache("sources.iceberg.export_plan", 4096)
 
 
 def _transcode_kms_file(spark, src_path: str, reader_opts: dict,
@@ -1831,9 +1833,7 @@ def export_reference_metadata(table, dest_root: str,
         for d in plan.eq_deletes:
             files.append(entry(d, 2))
         if not (transcode_map or dv_transcode_map):
-            if len(_EXPORT_PLAN_CACHE) >= _EXPORT_PLAN_CACHE_MAX:
-                _EXPORT_PLAN_CACHE.pop(next(iter(_EXPORT_PLAN_CACHE)))
-            _EXPORT_PLAN_CACHE[ck] = ([dict(f) for f in files], had_dv)
+            _EXPORT_PLAN_CACHE.put(ck, ([dict(f) for f in files], had_dv))
         return files
 
     # preserve engine identity: the exported refs/snapshot ids and

@@ -25,6 +25,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .caches import BoundedCache
+
 BUCKET_N_PROP = "write.spj.bucket-n"
 BUCKET_KEY_PROP = "write.spj.bucket-key"
 SPARK_TABLE_PROP = "write.spj.spark-table"
@@ -91,36 +93,24 @@ def _bucket_meta(table):
     return None
 
 
-# SPJ-enablement verdicts memoized per (session, table uuid, snapshot,
-# mirror): the check re-plans the table and round-trips DESCRIBE TABLE
-# (~110 ms of fixed driver work per join at sf0.1 — measured as the gap
-# between `bucketed_join + count` and the mirror-only join). Any engine
-# mutation commits a NEW snapshot id, so a stale verdict cannot survive a
-# table change; out-of-band file mutations under the mirror location are
-# outside the engine's consistency contract (as for the reference's
-# metadata-trusting planner).
-_LAYOUT_CACHE: dict = {}
-_LAYOUT_CACHE_MAX = 64
+# SPJ-enablement verdicts by (app id, table uuid, snapshot, mirror): the
+# check re-plans the table and round-trips DESCRIBE TABLE (~110 ms per
+# join at sf0.1). Every engine mutation commits a new snapshot id, so a
+# verdict cannot outlive the files it judged; out-of-band changes under
+# the mirror location are outside the engine's consistency contract.
+_LAYOUT_CACHE = BoundedCache("spj.layout", 64)
 
 
 def _layout_holds(table, spark: SparkSession, mirror: str) -> bool:
     """SPJ enablement: the bucket-aware relation reads the catalog table's
     current files — valid only while the engine plan's live file set is
     exactly the bucketed write (no compaction/deletes since)."""
-    try:
-        key = (spark.sparkContext.applicationId,
-               table.metadata.table_uuid,
-               table.metadata.current_snapshot_id, mirror)
-    except Exception:
-        key = None
-    if key is not None and key in _LAYOUT_CACHE:
-        _LAYOUT_CACHE[key] = _LAYOUT_CACHE.pop(key)  # LRU touch
-        return _LAYOUT_CACHE[key]
-    verdict = _layout_holds_uncached(table, spark, mirror)
-    if key is not None:
-        while len(_LAYOUT_CACHE) >= _LAYOUT_CACHE_MAX:
-            _LAYOUT_CACHE.pop(next(iter(_LAYOUT_CACHE)))
-        _LAYOUT_CACHE[key] = verdict
+    key = (spark.sparkContext.applicationId, table.metadata.table_uuid,
+           table.metadata.current_snapshot_id, mirror)
+    verdict = _LAYOUT_CACHE.get(key)
+    if verdict is None:
+        verdict = _LAYOUT_CACHE.put(
+            key, _layout_holds_uncached(table, spark, mirror))
     return verdict
 
 

@@ -75,8 +75,8 @@ GATES_ABS = {
     # an alternate ceiling for names already in GATES_ABS).
     "plan_import_decode_10k": 0.40,
     # Steady-state REPLANNING twin of plan_distributed_full (r14): same
-    # 32-task distributed planning job with the session memos
-    # (_MANIFEST_CACHE / _ENTRIES_PLAN_CACHE) left warm. Exists so a
+    # 32-task distributed planning job with the session memos (the
+    # manifest-list and JVM schema caches) left warm. Exists so a
     # regression in the cache tiers — which would push the warm time up
     # toward (or past) the cold time — is gated, not just visible.
     # Same ceiling as the cold entry: the dominant cost is the same
@@ -121,6 +121,10 @@ GATES_RATIO = {
     "mor_dv": ("mor_dv_ratio", None, 1.35),
     "mor_pos": ("mor_pos_ratio", None, 2.0),
     "eq_mor": ("eq_mor_ratio", None, 2.0),
+    # scattered keys over an unclustered layout: the compiled-probe tier
+    # (eq_mor's contiguous keys take the range tier), at the ceiling
+    # eq_mor had while it measured this shape
+    "eq_mor_scattered": ("eq_mor_scattered_ratio", None, 2.0),
     "mor_unrelated": ("mor_unrelated_ratio", None, 1.4),
     "q1_vs_raw": ("q1_vs_raw_ratio", None, 1.5),
 }
@@ -133,6 +137,8 @@ GATES_RATIO_FALLBACK = {
     "mor_pos": ("delete_mor_scan", "orders_scan_no_deletes_baseline", 2.3),
     "eq_mor": ("eq_delete_mor_scan", "orders_scan_no_deletes_baseline",
                2.3),
+    "eq_mor_scattered": ("eq_delete_mor_scattered_scan",
+                         "orders_scan_no_deletes_baseline", 2.3),
     "mor_unrelated": ("mor_unrelated_delete_scan",
                       "orders_filtered_scan_baseline", 1.6),
 }

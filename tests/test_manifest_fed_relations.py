@@ -219,6 +219,26 @@ def test_manifest_fed_read_launches_no_listing_job(spark, tmp_path):
         spark.sparkContext.setLocalProperty("spark.job.description", None)
 
 
+def test_one_file_position_runs_read_as_one_relation(spark, tmp_path):
+    """Inline position runs that touch one of two files are applied by
+    the compiled probe on one relation, not by a clean/hit union."""
+    from iceberg_spark import jvm_probe
+
+    if not jvm_probe.available(spark):
+        pytest.skip("no JDK for the probe helper jar")
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    t = cat.create_table("db.pos1", _rows(spark, 0, 1).schema,
+                         properties=MOR)
+    t.append(_rows(spark, 0, 10).coalesce(1))
+    t.append(_rows(spark, 100, 110).coalesce(1))
+    t.refresh().delete_where((col("id") >= 104) & (col("id") <= 106))
+    df = t.refresh().to_df()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1 and "Union" not in plan
+    assert sorted(r.id for r in df.collect()) == \
+        list(range(10)) + [100, 101, 102, 103, 107, 108, 109]
+
+
 def test_scan_report_names_relation_build(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     t = cat.create_table("db.rep", _rows(spark, 0, 1).schema)

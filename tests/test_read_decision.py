@@ -171,29 +171,3 @@ def test_pos_join_tiers(pos_table, monkeypatch, bcast_bytes, tier):
     assert (dirty.pos_tier, dirty.pos_ranges) == (tier, None)
     assert dirty.need_pos and dirty.need_meta
     assert pos_table.to_df().count() == 17
-
-
-def test_scan_cache_evicts_oldest_entry(pos_table, monkeypatch):
-    """A capped scan cache evicts its oldest entry alone: cap + 1
-    inserts leave cap entries, the first one gone."""
-    t = pos_table
-    for lo in (0, 2):
-        t.delete_where(col("id") == lo, mode="merge-on-read")
-        t = t.refresh()
-    dels = t.scan().plan_files().pos_deletes
-    assert len(dels) == 3
-    monkeypatch.setattr(S, "_POS_RUNS_CACHE", {})
-    monkeypatch.setattr(S, "_POS_RUNS_CACHE_CAP", 2)
-    for d in dels:
-        S._entry_runs(d)
-    keys = [(d.file.file_path, d.file.content_offset or 0) for d in dels]
-    assert list(S._POS_RUNS_CACHE) == keys[1:]
-
-
-def test_bounded_put_refresh_and_on_evict():
-    cache, evicted = {}, []
-    for k in "abc":
-        S._bounded_put(cache, 3, k, k.upper())
-    S._bounded_put(cache, 3, "a", "A2")   # re-put refreshes recency
-    S._bounded_put(cache, 3, "d", "D", on_evict=evicted.append)
-    assert list(cache) == ["c", "a", "d"] and evicted == ["B"]
